@@ -114,39 +114,6 @@ def langid_udf(texts: pd.Series) -> pd.DataFrame:
     return score_batch(texts)
 
 
-def with_langid(text: Column) -> dict[str, Column]:
-    """Attach ``langid_pred`` / ``langid_conf`` columns for a text column —
-    one struct-returning pandas UDF, split into two fields."""
-    struct = langid_udf(text)
-    return {
-        "langid_pred": struct.getField("langid_pred"),
-        "langid_conf": struct.getField("langid_conf"),
-    }
-
-
-def langid_jvm_cols(text: Column) -> dict[str, Column]:
-    """The SAME model as :func:`score_batch`, evaluated entirely JVM-side:
-    per language, hits = size(filter(lowered-tokens, token IN word-set))
-    — an InSet hash probe per token, no Python objects, no Arrow transfer.
-    Counts are the same exact integers as the pandas path, fractions the
-    same IEEE divisions, argmax the same first-max-in-sorted-lang-order —
-    so predictions and confidences are bit-identical and keep/drop parity
-    is unaffected (asserted in tests/test_webtext_parity.py).
-
-    This is the hot path for the heuristic stand-in model (the pipeline's
-    default). A REAL fastText binary cannot be a column expression — the
-    pandas UDF (:func:`langid_udf`) is the production pattern for that,
-    kept tested behind ``QualityFilterPipeline(langid="pandas")``.
-
-    The lowered token array is materialized once per row via a
-    multi-referenced alias only when the caller does so; as a bare
-    expression each language's filter re-lowers (HOFs have no CSE) —
-    pass a pre-lowered array column for the hot path."""
-    words = F.filter(F.split(F.lower(F.coalesce(text, F.lit(""))), "[ \\t\\n\\r]+"),
-                     lambda w: w != "")
-    return langid_jvm_from_words(words)
-
-
 def attach_langid_jvm(df, text_col: str = "text", lowered_tokens_col: str | None = None):
     """Attach ``langid_pred``/``langid_conf`` via the JVM model, staged so
     every expensive piece is evaluated exactly once per row: the lowered

@@ -199,13 +199,6 @@ def perplexity_prenorm_udf(normalized: pd.Series) -> pd.Series:
     return gather_batch(normalized)
 
 
-def log_perplexity(text: Column) -> Column:
-    """log-perplexity with the normalization stage in JVM codegen and
-    only the table gather in Python — same values as
-    :func:`perplexity_udf` (same table, same normalized bytes)."""
-    return perplexity_prenorm_udf(normalized_for_ppl(text))
-
-
 # --- distributed training of the same model -------------------------------
 #
 # Scoring above uses a model trained at import time on the embedded seed

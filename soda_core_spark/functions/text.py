@@ -141,27 +141,6 @@ def doc_fingerprint(text: Column) -> Column:
     return F.xxhash64(normalized)
 
 
-def all_signals(text: Column) -> dict[str, Column]:
-    """The full signal map as self-contained Column expressions (each
-    signal re-derives ``words``). Prefer :func:`with_signals` on a
-    DataFrame — it materializes the token array once per row, which is
-    ~2× faster (higher-order functions run interpreted, so Catalyst does
-    NOT common-subexpression-eliminate the repeated splits; a separate
-    Project with a multi-referenced non-cheap alias survives
-    CollapseProject and is evaluated once)."""
-    w = words_col(text)
-    return {
-        "n_chars": n_chars(text),
-        "n_words": n_words(w),
-        "alnum_ratio": alnum_ratio(text),
-        "stopword_density": stopword_density(w),
-        "bigram_repetition": bigram_repetition(w),
-        "mean_word_length": mean_word_length(text, w),
-        "line_dedup_ratio": line_dedup_ratio(text),
-        "doc_fingerprint": doc_fingerprint(text),
-    }
-
-
 def bigrams_col(words: Column) -> Column:
     """Word 2-gram array (NULL when fewer than 2 words)."""
     n = F.size(words)

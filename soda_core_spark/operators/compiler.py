@@ -44,13 +44,6 @@ def any_of(conds: list[Optional[Column]]) -> Optional[Column]:
     return reduce(lambda a, b: a | b, conds)
 
 
-def all_of(conds: list[Optional[Column]]) -> Optional[Column]:
-    conds = [c for c in conds if c is not None]
-    if not conds:
-        return None
-    return reduce(lambda a, b: a & b, conds)
-
-
 def value_col(column: str, column_expression: Optional[str] = None) -> Column:
     """The value a column check evaluates: the physical column, or the
     contract's ``column_expression`` SQL (reference ColumnImpl

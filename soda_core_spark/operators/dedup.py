@@ -248,23 +248,6 @@ def _salted_hash(i: int):
     return lambda s: F.xxhash64(F.lit(i), s)
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """MinHash signature as a single column expression: for hash i, min
-    over xxhash64(i, shingle). NOTE: higher-order functions run
-    interpreted with no common-subexpression elimination, so referencing
-    this column multiple times re-evaluates the whole shingle pipeline —
-    for the hot path use the explode→groupBy aggregation form inside
-    :func:`minhash_near_duplicates` (same values, each shingle hashed
-    once). This expression form remains for single-reference use
-    (e.g. attaching a signature column during a write)."""
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, _salted_hash(i)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def lsh_band_keys(signature: Column, bands: int, rows: int) -> Column:
     """Array of ``bands`` band keys; docs sharing ANY band key are
     candidates. Key = hash of (band index, the band's signature slice)."""

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from soda_core_spark.operators import prefix
+
 
 def key_skew_stats(
     df: DataFrame,
@@ -583,11 +585,11 @@ def spearman_correlation(
 
     1. per signal, one partial-aggregated groupBy → one row per
        DISTINCT value;
-    2. the below-count prefix runs as quantile-sketch range buckets +
-       per-bucket windows + broadcast bucket offsets
-       (:func:`_avg_rank_table` — the ``spearman_matrix`` machinery,
-       now shared; the former ``Window.orderBy`` over the distinct
-       values serialized a wide-range signal through one task);
+    2. the below-count prefix is the bucketed running sum of
+       :mod:`~soda_core_spark.operators.prefix` (:func:`_avg_rank_table`
+       — the ``spearman_matrix`` machinery; the former
+       ``Window.orderBy`` over the distinct values serialized a
+       wide-range signal through one task);
     3. rank tables join back to the rows on the value key (AQE
        broadcasts them when small), then ONE ``corr`` aggregate.
 
@@ -1570,8 +1572,8 @@ def heaps_law_fit(
 
     The growth curve needs a CORPUS-ORDER prefix notion, which a naive
     implementation makes sequential. Here the order is the md5 hash of
-    the document id cut into ``buckets`` contiguous ranges (the exact
-    bucketing of ``sampling.sample_to_token_budget``, so the prefix
+    the document id cut into ``buckets`` contiguous ranges
+    (:func:`~soda_core_spark.operators.prefix.hash_bucket`, so the prefix
     order is deterministic across engines/partitionings), and the whole
     curve comes out of two parallel aggregates:
 
@@ -1596,9 +1598,7 @@ def heaps_law_fit(
 
     if buckets < 2:
         raise ValueError(f"buckets must be >= 2, got {buckets}")
-    order = F.md5(F.col(id_col).cast("string"))
-    prefix32 = F.conv(F.substring(order, 1, 8), 16, 10).cast("long")
-    bucket = F.floor((prefix32 * F.lit(int(buckets))) / F.lit(float(2**32)))
+    bucket = prefix.hash_bucket(F.md5(F.col(id_col).cast("string")), buckets)
     toks = df.select(
         bucket.alias("__b"),
         F.explode(
@@ -5153,14 +5153,10 @@ def _avg_rank_table(
     value's ties would occupy in a full sort (1-based).
 
     Scale shape: never a global single-reducer sort. Values collapse
-    to per-value counts first (groupBy), each distinct value lands in
-    an order-compatible range bucket chosen from a driver-bounded
-    quantile sketch (≤ ``buckets`` cut points — the only collect), the
-    below-count prefix runs as per-bucket windows plus broadcast
-    bucket offsets — the q49/q64 two-stage-cumsum contract, keyed by
-    value order instead of hash order. Bucketing is a pure monotone
-    function of the value, so recomputation across stages is
-    deterministic and ties never straddle buckets."""
+    to per-value counts first (groupBy); the below-count prefix is the
+    exact bucketed running sum of :mod:`~soda_core_spark.operators.prefix`
+    at distinct-value grain, bucketed by ≤ ``buckets`` quantile-sketch
+    value ranges."""
     v = F.col(col).cast("double")
     vals = df.select(v.alias("__v"))
     if not pre_filtered:
@@ -5173,52 +5169,12 @@ def _avg_rank_table(
             F.col("__v").isNotNull() & ~F.isnan(F.col("__v"))
         )
     counts = vals.groupBy("__v").agg(F.count(F.lit(1)).alias("__c"))
-    if buckets > 1:
-        qs = [i / buckets for i in range(1, buckets)]
-        cuts = vals.agg(
-            F.percentile_approx("__v", qs, 10_000).alias("c")
-        ).collect()[0]["c"] or []
-        # strictly increasing cut list (duplicates collapse buckets)
-        uniq: list[float] = []
-        for c in cuts:
-            if not uniq or c > uniq[-1]:
-                uniq.append(float(c))
-    else:
-        uniq = []
-    if uniq:
-        # number of cut points strictly below the value — a plain
-        # CASE-sum over ≤ buckets-1 literals (a higher-order filter()
-        # here trips lambda rebinding when the plan branch is reused)
-        bucket = sum(
-            (
-                F.when(F.lit(c) < F.col("__v"), 1).otherwise(0)
-                for c in uniq
-            ),
-            F.lit(0),
-        ).cast("int")
-    else:
-        bucket = F.lit(0)
-    tagged = counts.select("__v", "__c", bucket.alias("__b"))
-    bsum = tagged.groupBy("__b").agg(F.sum("__c").alias("__s"))
-    off_w = Window.orderBy("__b").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = bsum.withColumn(
-        "__off", F.coalesce(F.sum("__s").over(off_w), F.lit(0))
-    ).select("__b", "__off")
-    cum_w = (
-        Window.partitionBy("__b")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    below = F.col("__off") + F.sum("__c").over(cum_w) - F.col("__c")
-    return (
-        tagged.join(F.broadcast(offsets), "__b")
-        .select(
-            "__v",
-            (below.cast("double") + (F.col("__c") + 1) / 2.0)
-            .alias("__rank"),
-        )
+    [bucket] = prefix.sketch_buckets(vals, ["__v"], buckets)
+    ranked = prefix.running_sum(counts, F.col("__c"), bucket, [F.col("__v")])
+    below = F.col(prefix.CUM) - F.col("__c")
+    return ranked.select(
+        "__v",
+        (below.cast("double") + (F.col("__c") + 1) / 2.0).alias("__rank"),
     )
 
 
@@ -6118,26 +6074,17 @@ def _exact_ntiles(
 ) -> DataFrame:
     """Exact ``ntile(tiles) OVER (ORDER BY value, key)`` for one or more
     ``(value_col, key_col, out_col)`` specs — WITHOUT a single-partition
-    window over the input grain (the q248/q249 scale fix; pattern of
-    ``retrieval.rank_fusion`` / ``_avg_rank_table``).
+    window over the input grain (the q248/q249 scale fix).
 
-    Stage shape per spec:
-
-    1. ≤ ``buckets``−1 order-compatible cut points from ONE shared
-       quantile-sketch aggregate over all specs (the only collect —
-       driver-bounded);
-    2. bucket id = count of cuts strictly below the value (monotone in
-       the value, so ties never straddle buckets; NULL values take
-       bucket −1, reproducing the global window's NULLS FIRST);
-    3. exclusive lower-bucket count offsets — a window over the tiny
-       bucket summary only;
-    4. within-bucket ``row_number`` ordered by (value, key) — windows
-       partitioned by bucket, parallel across buckets; global row
-       r = offset + within;
-    5. ntile from r and the broadcast total N by the standard-SQL
-       split (first N mod tiles tiles get ⌈N/tiles⌉ rows) — exactly
-       Spark's and DuckDB's NTile arithmetic, so results are provably
-       identical to the window form.
+    Per spec, the global row number r is the exact bucketed running
+    count of :mod:`~soda_core_spark.operators.prefix`, ordered by
+    (value NULLS FIRST, key) and bucketed by ≤ ``buckets`` value ranges
+    from ONE quantile sketch shared by all specs (NULL values take
+    bucket −1, reproducing the global window's NULLS FIRST). The ntile
+    comes from r and the total N by the standard-SQL split (first
+    N mod tiles tiles get ⌈N/tiles⌉ rows) — exactly Spark's and
+    DuckDB's NTile arithmetic, so results are identical to the window
+    form.
 
     Tie-safety requires (value, key) to be unique per row — the callers
     order by an aggregate with the group key as tiebreak, which is.
@@ -6154,63 +6101,24 @@ def _exact_ntiles(
         (s[0], s[1], s[2], (s[3] if len(s) > 3 else s[0]))
         for s in specs
     ]
-    qs = [i / buckets for i in range(1, buckets)]
-    sketch = df.agg(
-        *[
-            F.percentile_approx(bc, qs, 10_000).alias(f"__cuts_{i}")
-            for i, (_v, _k, _o, bc) in enumerate(norm)
-        ]
-    ).collect()[0]
+    sketched = prefix.sketch_buckets(df, [s[3] for s in norm], buckets)
     out = df
-    for i, (value_col, key_col, out_col, bucket_col) in enumerate(norm):
-        cuts = sketch[f"__cuts_{i}"] or []
-        uniq: list = []
-        for c in cuts:
-            if not uniq or c > uniq[-1]:
-                uniq.append(c)
-        if uniq:
-            # count of cut points strictly below the value — a CASE-sum
-            # over ≤ buckets-1 literals (the _avg_rank_table idiom)
-            nn_bucket = sum(
-                (
-                    F.when(F.lit(c) < F.col(bucket_col), 1).otherwise(0)
-                    for c in uniq
-                ),
-                F.lit(0),
-            ).cast("int")
-        else:
-            nn_bucket = F.lit(0)
+    for (value_col, key_col, out_col, _), nn_bucket in zip(norm, sketched):
         bucket = F.when(
             F.col(value_col).isNull(), F.lit(-1)
         ).otherwise(nn_bucket)
-        b, off, n, rn = f"__b_{i}", f"__off_{i}", f"__n_{i}", f"__rn_{i}"
-        tagged = out.withColumn(b, bucket)
-        bsum = tagged.groupBy(b).agg(F.count(F.lit(1)).alias("__s"))
-        off_w = Window.orderBy(b).rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = bsum.select(
-            b,
-            F.coalesce(F.sum("__s").over(off_w), F.lit(0)).alias(off),
-        )
-        total = bsum.agg(F.sum("__s").cast("long").alias(n))
-        in_w = Window.partitionBy(b).orderBy(
-            F.col(value_col).asc_nulls_first(), F.col(key_col)
-        )
-        joined = (
-            tagged.join(F.broadcast(offsets), b)
-            .crossJoin(F.broadcast(total))
-            .withColumn(rn, F.row_number().over(in_w))
-        )
-        r = (F.col(off) + F.col(rn)).cast("long")
-        q = F.floor(F.col(n) / tiles).cast("long")
-        rem = F.col(n) % tiles
+        order = [F.col(value_col).asc_nulls_first(), F.col(key_col)]
+        ranked = prefix.running_sum(out, F.lit(1), bucket, order)
+        r = F.col(prefix.CUM).cast("long")
+        n = F.col(prefix.TOTAL)
+        q = F.floor(n / tiles).cast("long")
+        rem = n % tiles
         cut_rows = rem * (q + 1)
         tile = F.when(
             r <= cut_rows, F.floor((r - 1) / (q + 1)) + 1
         ).otherwise(rem + F.floor((r - 1 - cut_rows) / q) + 1)
-        out = joined.withColumn(out_col, tile.cast("long")).drop(
-            b, off, n, rn
+        out = ranked.withColumn(out_col, tile.cast("long")).drop(
+            prefix.CUM, prefix.TOTAL
         )
     return out
 

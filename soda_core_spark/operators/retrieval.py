@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from soda_core_spark.functions.text import words_col
+from soda_core_spark.operators import prefix
 
 
 def bm25_topk(
@@ -119,15 +120,13 @@ def rank_fusion(
     1. melt the S signals into (id, signal, value) long form in the one
        corpus scan, and collapse to DISTINCT (signal, value) counts — a
        map-side-combined aggregate, immune to tie skew;
-    2. uniform value buckets per signal (min/max from a tiny aggregate,
-       broadcast back); equal values land in the same bucket by
-       construction, so no tie straddles a boundary;
-    3. exclusive higher-bucket count offsets — a window over the
-       S × ``buckets`` summary only;
-    4. within-bucket strictly-greater counts — windows partitioned by
-       (signal, bucket), parallel across buckets; rank = 1 + offset +
-       within, provably the competition rank;
-    5. one shuffle join of ranks back onto the long form, then a single
+    2. the exact bucketed running sum of
+       :mod:`~soda_core_spark.operators.prefix` over those counts per
+       signal, in descending value order, bucketed by uniform value
+       ranges (min/max from a tiny aggregate, broadcast back): rank =
+       1 + the count of strictly greater values, with no window wider
+       than one (signal, bucket);
+    3. one shuffle join of ranks back onto the long form, then a single
        groupBy(id) pivots ranks wide and sums the fused score.
 
     Only (id, signal-name, double) triples ever shuffle. NULL signal
@@ -140,8 +139,6 @@ def rank_fusion(
     ensemble step a curation pipeline runs over the q11/q14/q15/q107
     signal family before thresholding.
     """
-    from pyspark.sql import Window
-
     if not signals:
         raise ValueError("signals must be non-empty")
     if k < 1:
@@ -169,34 +166,16 @@ def rank_fusion(
         F.lit(buckets - 1),
         F.floor((F.col("__hi") - F.col("__val")) / span * buckets),
     )).otherwise(F.lit(0))
-    bval = vals.join(F.broadcast(ranges), "__sig").withColumn(
-        "__bkt", bucket
-    )
-    off_w = (
-        Window.partitionBy("__sig")
-        .orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    in_w = (
-        Window.partitionBy("__sig", "__bkt")
-        .orderBy(F.col("__val").desc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    bsums = bval.groupBy("__sig", "__bkt").agg(
-        F.sum("__cnt").alias("__bsum")
-    )
-    offsets = bsums.withColumn(
-        "__off", F.coalesce(F.sum("__bsum").over(off_w), F.lit(0))
-    ).select("__sig", "__bkt", "__off")
-    ranked = (
-        bval.join(F.broadcast(offsets), ["__sig", "__bkt"])
-        .withColumn(
-            "__rank",
-            F.lit(1)
-            + F.col("__off")
-            + F.coalesce(F.sum("__cnt").over(in_w), F.lit(0)),
-        )
-        .select("__sig", "__val", "__rank")
+    ranked = prefix.running_sum(
+        vals.join(F.broadcast(ranges), "__sig"),
+        F.col("__cnt"),
+        bucket,
+        [F.col("__val").desc()],
+        ["__sig"],
+    ).select(
+        "__sig",
+        "__val",
+        (F.lit(1) + F.col(prefix.CUM) - F.col("__cnt")).alias("__rank"),
     )
     fused = long.join(ranked, ["__sig", "__val"])
     term = F.floor(F.lit(float(10**12)) / (F.lit(k) + F.col("__rank")))

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from soda_core_spark.operators import prefix
+
 _HEX = "0123456789abcdef"
 
 
@@ -192,56 +194,26 @@ def pack_token_shards(
     engines, restarts, and partitionings — what a resumable shard writer
     needs (re-runs regenerate byte-identical shard manifests).
 
-    Scale shape: the same two-stage distributed cumsum as
-    :func:`sample_to_token_budget` — per-bucket token sums (tiny
-    aggregate), exclusive prefix offsets over that aggregate only,
-    offsets broadcast back, within-bucket running total (``buckets``-way
-    parallel windows). No single-reducer global window; all arithmetic
-    is integer, so the oracle is exact.
+    Scale shape: the exact bucketed running sum of
+    :mod:`~soda_core_spark.operators.prefix` over ``buckets`` md5-order
+    ranges — no single-reducer global window; all arithmetic is
+    integer, so the oracle is exact.
     """
-    from pyspark.sql import Window
-
     if shard_tokens < 1:
         raise ValueError(f"shard_tokens must be >= 1, got {shard_tokens}")
     if buckets < 1:
         raise ValueError(f"buckets must be >= 1, got {buckets}")
-    reserved = {"__ps_bucket", "__ps_offset", "__ps_cum", shard_col} & set(
-        df.columns
-    )
-    if reserved:
-        raise ValueError(
-            f"input already has internal column(s) {sorted(reserved)}"
-        )
+    if shard_col in df.columns:
+        raise ValueError(f"input already has column {shard_col!r}")
     order = F.md5(F.col(id_col).cast("string"))
-    prefix32 = F.conv(F.substring(order, 1, 8), 16, 10).cast("long")
-    bucket = F.floor((prefix32 * F.lit(int(buckets))) / F.lit(float(2**32)))
     tok = F.col(token_col).cast("long")
-
-    tagged = df.withColumn("__ps_bucket", bucket)
-    bucket_sums = tagged.groupBy("__ps_bucket").agg(
-        F.sum(tok).alias("__ps_sum")
+    packed = prefix.running_sum(
+        df, tok, prefix.hash_bucket(order, buckets), [order, F.col(id_col)]
     )
-    off_w = (
-        Window.orderBy("__ps_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = bucket_sums.withColumn(
-        "__ps_offset", F.coalesce(F.sum("__ps_sum").over(off_w), F.lit(0))
-    ).select("__ps_bucket", "__ps_offset")
-    cum_w = (
-        Window.partitionBy("__ps_bucket")
-        .orderBy(order, F.col(id_col))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    exclusive = F.col("__ps_offset") + F.sum(tok).over(cum_w) - tok
-    return (
-        tagged.join(F.broadcast(offsets), "__ps_bucket")
-        .withColumn(
-            shard_col,
-            F.floor(exclusive / F.lit(int(shard_tokens))).cast("long"),
-        )
-        .select(*df.columns, shard_col)
-    )
+    exclusive = F.col(prefix.CUM) - tok
+    return packed.withColumn(
+        shard_col, F.floor(exclusive / F.lit(int(shard_tokens))).cast("long")
+    ).select(*df.columns, shard_col)
 
 
 def leakage_free_split(
@@ -363,81 +335,29 @@ def sample_to_token_budget(
     kept set is identical across engines/restarts/partitionings because
     both the order and the cumulative sum are hash-determined.
 
-    Scale shape — two-stage distributed cumsum, not a global window.
-    A running total ordered over all rows would put every candidate row
-    of a group through ONE reducer. Instead the hash order is cut into
-    ``buckets`` contiguous ranges (bucket = a monotonic function of the
-    md5 prefix, so bucket order IS hash order):
-
-    1. per-bucket token sums — a tiny partial aggregate
-       (``buckets × groups`` rows),
-    2. exclusive prefix offsets over those sums — a window over the tiny
-       aggregate only,
-    3. offsets with ``offset < budget`` broadcast-joined back; buckets
-       wholly past the budget DROP BEFORE the expensive sort-shuffle
-       (with a uniform hash only ~budget/total of the data reaches it),
-    4. within-bucket running total (window per (group, bucket) — up to
-       ``buckets``-way parallel per group); keep ``offset + cum ≤
-       budget``.
-
-    Global cumsum = bucket offset + within-bucket cumsum because bucket
-    boundaries align with the sort key, so the survivor set is provably
-    identical to the single-window form (pinned by a parity test).
+    Scale shape — the exact bucketed running sum of
+    :mod:`~soda_core_spark.operators.prefix` over ``buckets`` md5-order
+    ranges per group, not a global window (which would put every
+    candidate row of a group through ONE reducer). Between its two
+    stages, buckets whose offset is already past the budget DROP BEFORE
+    the expensive sort-shuffle (with a uniform hash only ~budget/total
+    of the data reaches it). The survivor set is identical to the
+    single-window form (pinned by a parity test).
     """
-    from pyspark.sql import Window
-
     if buckets < 1:
         raise ValueError(f"buckets must be ≥ 1, got {buckets}")
-    reserved = {"__tb_bucket", "__tb_offset", "__tb_cum"} & set(df.columns)
-    if reserved:
-        raise ValueError(
-            f"input already has internal column(s) {sorted(reserved)}"
-        )
     order = F.md5(F.col(id_col).cast("string"))
-    # bucket = floor(prefix32 * B / 2^32): exact in double (prefix32*B ≤
-    # 2^52) and monotonic non-decreasing in the md5 string, so rows of a
-    # bucket are contiguous in (order, id) sort order
-    prefix32 = F.conv(F.substring(order, 1, 8), 16, 10).cast("long")
-    bucket = F.floor((prefix32 * F.lit(int(buckets))) / F.lit(float(2**32)))
     keys = [group_col] if group_col is not None else []
     tok = F.col(token_col).cast("long")
-
-    tagged = df.withColumn("__tb_bucket", bucket)
-    bucket_sums = tagged.groupBy(*keys, "__tb_bucket").agg(
-        F.sum(tok).alias("__tb_sum")
+    tagged, offsets = prefix.bucket_offsets(
+        df, tok, prefix.hash_bucket(order, buckets), keys
     )
-    off_w = (
-        Window.partitionBy(*keys)
-        .orderBy("__tb_bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        bucket_sums.withColumn(
-            "__tb_offset", F.coalesce(F.sum("__tb_sum").over(off_w), F.lit(0))
-        )
-        .where(F.col("__tb_offset") < budget_tokens)
-        .select(*keys, "__tb_bucket", "__tb_offset")
-    )
-    cum_w = (
-        Window.partitionBy(*keys, "__tb_bucket")
-        .orderBy(order, F.col(id_col))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # null-safe on the group key: a NULL group is a real budget group
-    # (window PARTITION BY keeps a NULL partition; a plain equi-join
-    # would silently drop every NULL-group row from the sample)
-    t, o = tagged.alias("__tb_t"), F.broadcast(offsets).alias("__tb_o")
-    cond = F.col("__tb_t.__tb_bucket") == F.col("__tb_o.__tb_bucket")
-    for kc in keys:
-        cond = cond & F.col(f"__tb_t.{kc}").eqNullSafe(F.col(f"__tb_o.{kc}"))
+    within_budget = offsets.where(F.col(prefix.OFFSET) < budget_tokens)
     return (
-        t.join(o, cond)
-        .select(
-            *[F.col(f"__tb_t.{c}") for c in tagged.columns],
-            F.col("__tb_o.__tb_offset"),
+        prefix.apply_offsets(
+            tagged, within_budget, tok, [order, F.col(id_col)], keys
         )
-        .withColumn("__tb_cum", F.col("__tb_offset") + F.sum(tok).over(cum_w))
-        .where(F.col("__tb_cum") <= budget_tokens)
+        .where(F.col(prefix.CUM) <= budget_tokens)
         .select(*df.columns)
     )
 

@@ -84,12 +84,6 @@ def list_tables(spark: SparkSession, database: Optional[str] = None) -> list[str
     return [t.name for t in spark.catalog.listTables(database)]
 
 
-def table_schema(spark: SparkSession, identifier: str) -> T.StructType:
-    """DESCRIBE equivalent (reference sparkdf_data_source.py:456-467) —
-    the schema check's 'actual' side."""
-    return spark.table(identifier).schema
-
-
 def introspect_primary_keys(
     spark: SparkSession, identifier: str
 ) -> "Optional[list[str]]":

@@ -181,15 +181,18 @@ def test_lorenz_rfm_no_global_ntile_window(spark):
     window partitioned by the range bucket; the only unpartitioned
     windows run over the ≤ buckets-row summaries (lorenz additionally
     keeps its 10-row decile cumsum). Pin: no ntile anywhere, and every
-    row_number window is partitioned by a bucket column."""
+    running row-count window (the prefix module's sum(1) over a ROWS
+    frame) is partitioned by its bucket column."""
     from soda_core_spark.entry_queries import REGISTRY
+    from soda_core_spark.operators.prefix import BUCKET
 
     for q in ("q248_lorenz_deciles", "q249_rfm_segments"):
         plan = _plan(REGISTRY[q][0](spark, SF))
         assert "ntile" not in plan, (q, plan)
-        for line in plan.splitlines():
-            if "row_number()" in line:
-                assert "windowspecdefinition(__b_" in line, (q, line)
+        counts = [l for l in plan.splitlines() if "sum(1) windowspec" in l]
+        assert counts, (q, plan)
+        for line in counts:
+            assert f"windowspecdefinition({BUCKET}" in line, (q, line)
 
 
 def test_spearman_correlation_no_distinct_value_global_window(spark):

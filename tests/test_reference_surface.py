@@ -12,6 +12,7 @@ Reference semantics under test:
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -665,7 +666,10 @@ def test_contract_path_selector_matches_absolute_source_path(spark, people):
     c = contract_from_yaml(
         "dataset: people_pathsel\nchecks:\n  - row_count:\n      must_be_greater_than: 0\n"
     )
-    c.source_path = "/root/repo/contracts/webtext.yml"  # absolute, as the CLI passes it
+    # absolute, as the CLI passes it
+    c.source_path = str(
+        Path(__file__).resolve().parents[1] / "contracts" / "webtext.yml"
+    )
     res = verify_contract(
         spark, c, people, check_selectors=["contract_path=contracts/*.yml"]
     )

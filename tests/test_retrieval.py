@@ -5,7 +5,12 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from soda_core_spark.operators.retrieval import bm25_topk
+from soda_core_spark.operators.profiling import _avg_rank_table, _exact_ntiles
+from soda_core_spark.operators.retrieval import bm25_topk, rank_fusion
+from soda_core_spark.operators.sampling import (
+    pack_token_shards,
+    sample_to_token_budget,
+)
 
 
 @pytest.fixture(scope="module")
@@ -235,30 +240,49 @@ def test_token_budget_bucketed_matches_window_form(spark):
     ).columns == df.columns
 
 
-def test_token_budget_plan_is_distributed(spark):
-    """No single-partition Exchange on the DATA path: the only window
-    over the full rows partitions by (group, bucket); the offsets join
-    is broadcast. (The tiny per-bucket offsets window may legitimately
-    use SinglePartition — it sees ≤ buckets×groups rows.)"""
-    from soda_core_spark.operators.sampling import sample_to_token_budget
-
-    rows = [(i, "s", 10) for i in range(100)]
-    df = spark.createDataFrame(rows, ["doc_id", "src", "n_tok"])
-    out = sample_to_token_budget(
+_PREFIX_SUM_OPERATORS = {
+    "sample_to_token_budget": lambda df: sample_to_token_budget(
         df, 500, token_col="n_tok", group_col="src", buckets=64
-    )
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    # the big window keys on the bucket → parallel reducers
-    assert "hashpartitioning" in plan and "__tb_bucket" in plan
-    # offsets come back via broadcast, not a shuffled join
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    # every Window node over the full data is bucket-partitioned: a
-    # SinglePartition exchange may only feed the offsets aggregate,
-    # which sits below the broadcast side
+    ),
+    "pack_token_shards": lambda df: pack_token_shards(
+        df, 500, token_col="n_tok", buckets=64
+    ),
+    "_exact_ntiles": lambda df: _exact_ntiles(
+        df, [("n_tok", "doc_id", "tile")], 10, buckets=8
+    ),
+    "_avg_rank_table": lambda df: _avg_rank_table(df, "n_tok", buckets=8),
+    "rank_fusion": lambda df: rank_fusion(
+        df, {"t": F.col("n_tok")}, buckets=8
+    ),
+}
+
+
+@pytest.mark.parametrize("operator", list(_PREFIX_SUM_OPERATORS))
+def test_token_budget_plan_is_distributed(spark, operator):
+    """No single-partition Exchange on the DATA path of any operator
+    built on the bucketed prefix sum: the only window over the full
+    rows partitions by (group, bucket); the offsets join is broadcast.
+    (The tiny per-bucket offsets window may legitimately use
+    SinglePartition — it sees ≤ buckets×groups rows.)"""
     import re
 
-    for m in re.finditer(r"Window \[[^\]]*__tb_cum[^\]]*\]", plan):
-        assert "__tb_bucket" in m.group(0)
+    from soda_core_spark.operators.prefix import BUCKET, SUM
+
+    rows = [(i, "s", 10 + i % 7) for i in range(100)]
+    df = spark.createDataFrame(rows, ["doc_id", "src", "n_tok"])
+    out = _PREFIX_SUM_OPERATORS[operator](df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    # the big window keys on the bucket → parallel reducers
+    assert "hashpartitioning" in plan and BUCKET in plan
+    # offsets come back via broadcast, not a shuffled join
+    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    # every Window node is either bucket-partitioned (data grain) or
+    # sums the ≤ buckets × groups summary
+    windows = [line for line in plan.splitlines() if "Window [" in line]
+    assert windows, plan
+    for line in windows:
+        part = re.search(r"\], \[([^\]]*)\], \[", line)
+        assert f"sum({SUM}#" in line or (part and BUCKET in part[1]), line
 
 
 def test_pack_token_shards_matches_window_form(spark):
