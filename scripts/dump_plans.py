@@ -3,7 +3,10 @@ plans/<tag>/<query>_<suffix>.txt — the plan evidence the optimization
 round commits (judge checks plan claims against these files).
 
 Usage: python scripts/dump_plans.py <tag> <suffix> [query ...]
-Defaults to the bench queries + the perf-weak set at sf0.1.
+Defaults to the bench queries + the perf-weak set at sf0.1
+(``SPARK_GRAFT_SF_DIR``), on ``local[SPARK_GRAFT_CPUS]`` (default: all
+cores). An absolute <tag> writes to that directory instead of under
+plans/ — for uncommitted plan comparisons.
 """
 
 from __future__ import annotations
@@ -41,7 +44,7 @@ def main() -> int:
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     names = sys.argv[3:] or DEFAULT_QUERIES
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
 
     from pyspark.sql import SparkSession
 

@@ -21,7 +21,6 @@ from soda_core_spark.functions.text import EN_STOPWORDS
 from soda_core_spark.operators.dedup import (
     minhash_near_duplicates,
     normalized_text,
-    simhash64,
 )
 from soda_core_spark.operators.similarity import brute_force_topk
 

@@ -155,20 +155,12 @@ def shingles_col(text: Column, n: int = 3) -> Column:
     jaccard-1.0 duplicate of every other empty doc, a degenerate hot
     key at corpus scale and a cross-engine hazard (DuckDB's
     ``array_to_string([])`` is NULL while Spark's ``concat_ws`` is '',
-    so the two engines disagreed on exactly these rows)."""
-    words = F.filter(
-        F.split(F.lower(text), "[ \\t\\n\\r]+"), lambda w: w != ""
-    )
-    k = F.size(words)
-    cols = [F.slice(words, i + 1, k - (n - 1)) for i in range(n)]
-    grams = cols[0]
-    for c in cols[1:]:
-        grams = F.zip_with(grams, c, lambda a, b: F.concat_ws(" ", a, b))
-    return F.when(k >= n, F.array_distinct(grams)).otherwise(
-        F.when(k > 0, F.array(F.concat_ws(" ", words))).otherwise(
-            F.array().cast("array<string>")
-        )
-    )
+    so the two engines disagreed on exactly these rows).
+
+    Inline form: the tokenization is re-evaluated per reference; use
+    :func:`shingle_frame` wherever the array feeds more than one
+    expression."""
+    return _shingles_of_words(_words_of(text), n)
 
 
 def _words_of(text: Column) -> Column:
@@ -181,9 +173,9 @@ def _words_of(text: Column) -> Column:
 
 
 def _shingles_of_words(w: Column, n: int) -> Column:
-    """Shingle array from an already-materialized token-array column.
-    Value-identical to :func:`shingles_col` (same slice/zip_with grams,
-    same 1..n-1-word whole-text shingle, same empty-set policy)."""
+    """Shingle array from a token-array column — the grams, the
+    1..n-1-word whole-text shingle and the empty-set policy of
+    :func:`shingles_col`."""
     k = F.size(w)
     cols = [F.slice(w, i + 1, k - (n - 1)) for i in range(n)]
     grams = cols[0]
@@ -246,22 +238,6 @@ def _salted_hash(i: int):
     # (lambda s, i=i: ...) is seen by pyspark as the two-param
     # (element, index) form and the salt silently becomes the array index
     return lambda s: F.xxhash64(F.lit(i), s)
-
-
-def lsh_band_keys(signature: Column, bands: int, rows: int) -> Column:
-    """Array of ``bands`` band keys; docs sharing ANY band key are
-    candidates. Key = hash of (band index, the band's signature slice)."""
-    return F.array(
-        *[
-            F.xxhash64(
-                F.lit(b), F.concat_ws(",", *[
-                    F.element_at(signature, b * rows + r + 1).cast("string")
-                    for r in range(rows)
-                ])
-            )
-            for b in range(bands)
-        ]
-    )
 
 
 def plan_lsh_params(
@@ -334,71 +310,125 @@ def portable_token_hash(col: Column) -> Column:
 PORTABLE_HASH_BITS = 60
 
 
-
-
 def _md5_salted(i: int):
     # single-param lambda via closure — same reason as _salted_hash
     return lambda s: F.md5(F.concat_ws("|", F.lit(str(i)), s))
 
 
+def _minhash_mins(
+    sh: Column, num_hashes: int, portable_hash: bool
+) -> list[Column]:
+    """MinHash signature m_0..m_{num_hashes-1} as per-row expressions
+    over a MATERIALIZED shingle-array attribute (:func:`shingle_frame`):
+    m_i = ``array_min(transform(sh, hash_i))`` with hash_i = xxhash64
+    salted by i, or in portable mode the lexicographic min of
+    md5("i|shingle") — reproducible in any engine with md5.
+
+    This is the min-over-a-doc's-shingle-hashes the former explode →
+    groupBy(id) aggregate computed, value-identical (``array_min``
+    ignores no elements here: shingle hashes are never NULL). The
+    aggregate form existed to dodge re-evaluating the INLINE shingle
+    expression per hash; with ``sh`` an attribute that hazard is gone,
+    and dropping the aggregate removes an Exchange on id — plus, in
+    portable mode, a Sort + SortAggregate pair per evaluation (min over
+    md5 STRINGS has no mutable hash-aggregation buffer, so Spark used
+    sort-based aggregation over the full exploded shingle set). On the
+    r6 bench: 2 Exchange + 2 Sort + 4 SortAggregate removed from q18.
+    The md5/xxhash64 work per shingle is unchanged — that is the
+    declared computation."""
+    salted = _md5_salted if portable_hash else _salted_hash
+    return [F.array_min(F.transform(sh, salted(i))) for i in range(num_hashes)]
+
+
 def _band_keys_expr(
     sh: Column, num_hashes: int, bands: int, portable_hash: bool
 ) -> Column:
-    """Array of LSH band keys as ONE per-row expression over a
-    MATERIALIZED shingle-array attribute — the signature+banding stage
-    of MinHash LSH with no shuffle at all.
+    """Array of ``bands`` LSH band keys as ONE per-row expression over a
+    materialized shingle-array attribute — the signature+banding stage
+    of MinHash LSH with no shuffle at all (signatures:
+    :func:`_minhash_mins`). Band b hashes its ``rows = num_hashes //
+    bands`` signature slice with the band index:
+    ``xxhash64(b, concat_ws(",", m..))`` or, portable,
+    ``md5(concat_ws(",", "b", m..))``.
 
-    Signature m_i = ``array_min(transform(sh, hash_i))`` — the same
-    min-over-a-doc's-shingle-hashes the former explode → groupBy(id)
-    aggregate computed, value-identical (``array_min`` ignores no
-    elements here: shingle hashes are never NULL). The aggregate form
-    existed to dodge re-evaluating the INLINE shingle expression per
-    hash; with ``sh`` an attribute (:func:`shingle_frame`) that hazard
-    is gone, and dropping the aggregate removes an Exchange on id —
-    plus, in portable mode, a Sort + SortAggregate pair per evaluation
-    (min over md5 STRINGS has no mutable hash-aggregation buffer, so
-    Spark used sort-based aggregation over the full exploded shingle
-    set). The md5/xxhash64 work per shingle is unchanged — that is the
-    declared computation."""
-    rows = num_hashes // bands
-    if portable_hash:
-        mins = [
-            F.array_min(F.transform(sh, _md5_salted(i)))
-            for i in range(num_hashes)
-        ]
-        return F.array(
-            *[
-                F.md5(
-                    F.concat_ws(
-                        ",",
-                        F.lit(str(b)),
-                        *[mins[b * rows + r] for r in range(rows)],
-                    )
-                )
-                for b in range(bands)
-            ]
+    Raises ``ValueError`` unless ``1 <= bands <= num_hashes``: with more
+    bands than hashes ``rows`` is 0, every document gets the same
+    ``bands`` constant keys and the band join degenerates to all-pairs."""
+    if not 1 <= bands <= num_hashes:
+        raise ValueError(
+            f"LSH banding needs 1 <= bands <= num_hashes, got bands={bands}, "
+            f"num_hashes={num_hashes}"
         )
-    mins = [
-        F.array_min(F.transform(sh, _salted_hash(i)))
-        for i in range(num_hashes)
-    ]
-    # same band-key derivation lsh_band_keys produces over materialized
-    # m_i columns: xxhash64(b, concat_ws(",", m_{b·rows}..m_{b·rows+rows-1}))
-    return F.array(
-        *[
-            F.xxhash64(
-                F.lit(b),
-                F.concat_ws(
-                    ",",
-                    *[
-                        mins[b * rows + r].cast("string")
-                        for r in range(rows)
-                    ],
-                ),
-            )
-            for b in range(bands)
+    rows = num_hashes // bands
+    mins = _minhash_mins(sh, bands * rows, portable_hash)
+    slices = [mins[b * rows:(b + 1) * rows] for b in range(bands)]
+    if portable_hash:
+        keys = [
+            F.md5(F.concat_ws(",", F.lit(str(b)), *m))
+            for b, m in enumerate(slices)
         ]
+    else:
+        keys = [
+            F.xxhash64(
+                F.lit(b), F.concat_ws(",", *[x.cast("string") for x in m])
+            )
+            for b, m in enumerate(slices)
+        ]
+    return F.array(*keys)
+
+
+def _banded_frame(
+    base: DataFrame, num_hashes: int, bands: int, portable_hash: bool
+) -> DataFrame:
+    """``(id, band)`` LSH band keys per document of a :func:`shingle_frame`
+    ``(id, shl)`` — one tokenization per row, per-row signatures, no
+    aggregate."""
+    return base.select(
+        "id",
+        F.explode_outer(
+            _band_keys_expr(F.col("shl"), num_hashes, bands, portable_hash)
+        ).alias("band"),
     )
+
+
+def _band_candidate_pairs(
+    base: DataFrame, num_hashes: int, bands: int, portable_hash: bool
+) -> DataFrame:
+    """Distinct ``(id_a, id_b)``, id_a < id_b, of the documents of a
+    :func:`shingle_frame` that share at least one LSH band key.
+
+    The band self-join runs over bare ``(id, band)`` pairs (16 bytes a
+    row) — NOT over the shingle arrays, which would be duplicated
+    ``bands``× through the shuffle; callers re-attach the arrays to the
+    deduplicated pairs (:func:`_attach_shingles`), so each doc's
+    shingles cross the wire once per side. A giant duplicate cluster
+    makes a hot band key; AQE skew-join splits it
+    (spark.sql.adaptive.skewJoin)."""
+    banded = _banded_frame(base, num_hashes, bands, portable_hash)
+    a, b = banded.alias("a"), banded.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.id") < F.col("b.id")))
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .dropDuplicates(["id_a", "id_b"])
+    )
+
+
+def _attach_shingles(
+    pairs: DataFrame, sets: DataFrame, col: str
+) -> DataFrame:
+    """``pairs`` with each side's shingle array re-attached from the
+    ``(id, col)`` frame ``sets`` by two id-joins, as ``sh_a`` / ``sh_b``
+    (verify with :func:`_jaccard`)."""
+    sh_a = sets.select(F.col("id").alias("id_a"), F.col(col).alias("sh_a"))
+    sh_b = sets.select(F.col("id").alias("id_b"), F.col(col).alias("sh_b"))
+    return pairs.join(sh_a, "id_a").join(sh_b, "id_b")
+
+
+def _jaccard(a: Column, b: Column) -> Column:
+    """Exact set Jaccard of two distinct-element arrays, as a double."""
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    union = F.size(F.array_union(a, b)).cast("double")
+    return inter / union
 
 
 def minhash_near_duplicates(
@@ -415,58 +445,26 @@ def minhash_near_duplicates(
     verification.
 
     Scale path, stage by stage:
-    1. signatures + band keys are per-row column expressions — no shuffle;
-    2. the band self-join runs over bare ``(id, band)`` pairs (16 bytes a
-       row) — NOT over the shingle arrays, which would be duplicated
-       ``bands``× through the shuffle;
-    3. candidate (id_a, id_b) pairs are deduped, then shingle arrays are
-       re-attached by two id-joins, so each doc's shingles cross the wire
-       once per side;
+    1. signatures + band keys are per-row column expressions over the
+       materialized shingle array — no shuffle (:func:`_minhash_mins`,
+       :func:`_band_keys_expr`);
+    2. the band self-join runs over bare ``(id, band)`` pairs and yields
+       distinct candidates (:func:`_band_candidate_pairs`);
+    3. shingle arrays are re-attached by two id-joins;
     4. exact Jaccard verifies candidates only.
-    A giant duplicate cluster makes a hot band key; AQE skew-join splits
-    it (spark.sql.adaptive.skewJoin).
 
     ``portable_hash=True`` swaps xxhash64 for lexicographic mins over md5
     strings (signature m_i = min over shingles of md5("i|shingle"); band
     key = md5("b,m..")) — identical results in any engine with md5, so
     the whole LSH pipeline is DuckDB-oracle-checkable. Empty/whitespace
     documents are excluded in both modes (they have no shingles; pairing
-    them is meaningless).
-
-    r6 optimization: signatures are ``array_min(transform(shl, hash_i))``
-    over the MATERIALIZED shingle-array attribute (:func:`shingle_frame`),
-    not the explode → groupBy(id) min-aggregate — value-identical (min
-    over a doc's shingle hashes either way), but the aggregate form cost
-    one exchange on id plus, in portable mode, a Sort + SortAggregate
-    per join side (min over md5 STRINGS has no mutable hash-agg buffer,
-    so Spark fell back to sort-based aggregation over the full exploded
-    shingle set). The expression form is safe now that ``shl`` is an
-    attribute: the round-2 hazard it replaced (re-evaluating the whole
-    shingle pipeline per hash) was a property of the INLINE expression,
-    which :func:`shingle_frame` retired. Plan effect on the bench:
-    2 Exchange + 2 Sort + 4 SortAggregate removed from q18."""
-    base = shingle_frame(df, id_col, text_col, shingle_n).withColumnRenamed(
-        "shl", "sh"
-    )
-    banded = base.select(
-        "id",
-        F.explode_outer(
-            _band_keys_expr(F.col("sh"), num_hashes, bands, portable_hash)
-        ).alias("band"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sh_a = base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sh_b = base.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    enriched = pairs.join(sh_a, "id_a").join(sh_b, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+    them is meaningless). Raises ``ValueError`` unless
+    ``1 <= bands <= num_hashes``."""
+    base = shingle_frame(df, id_col, text_col, shingle_n)
+    pairs = _band_candidate_pairs(base, num_hashes, bands, portable_hash)
     return (
-        enriched.withColumn("jaccard", inter / union)
+        _attach_shingles(pairs, base, "shl")
+        .withColumn("jaccard", _jaccard(F.col("sh_a"), F.col("sh_b")))
         .where(F.col("jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -498,12 +496,10 @@ def ngram_jaccard_pairs(
     pairs = a.join(
         b, (F.col("a.k") == F.col("b.k")) & (F.col("a.id") < F.col("b.id"))
     )
-    inter = F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
-    union = F.size(F.array_union("a.sh", "b.sh")).cast("double")
     return pairs.select(
         F.col("a.id").alias("id_a"),
         F.col("b.id").alias("id_b"),
-        (inter / union).alias("jaccard"),
+        _jaccard(F.col("a.sh"), F.col("b.sh")).alias("jaccard"),
     ).where(F.col("jaccard") >= threshold)
 
 
@@ -523,17 +519,16 @@ def simhash_df(
     of token-hash bits (+1/−1), sign → bit. Duplicate tokens vote once per
     occurrence (standard frequency weighting).
 
-    This is the scale form: explode tokens → hash each token ONCE → one
-    groupBy with ``bits`` conditional sums (full map-side partial
-    aggregation, so the shuffle carries one row of ``bits`` ints per doc).
-    The expression form (:func:`simhash64`) re-evaluates the token
-    pipeline per bit (higher-order functions have no common-subexpression
-    elimination) — keep it for single-column attach only.
+    Scale form: explode tokens → hash each token ONCE → one groupBy with
+    ``bits`` conditional sums (full map-side partial aggregation, so the
+    shuffle carries one row of ``bits`` ints per doc). A per-row
+    expression form would re-evaluate the token pipeline per bit
+    (higher-order functions have no common-subexpression elimination).
 
     ``portable_hash=True`` uses the md5-derived 60-bit token hash so the
     fingerprint is reproducible in DuckDB (``bits`` is capped at
     PORTABLE_HASH_BITS). Token-less documents get simhash 0 (all votes
-    zero), same as :func:`simhash64`."""
+    zero)."""
     if portable_hash:
         bits = min(bits, PORTABLE_HASH_BITS)
         th = portable_token_hash
@@ -649,128 +644,9 @@ def hamming_near_duplicates(
     )
 
 
-def simhash64(text: Column) -> Column:
-    """64-bit SimHash over word tokens, entirely with built-in functions:
-    per bit, majority vote of token-hash bits (+1/−1), sign → bit. The
-    per-bit fold is ``aggregate`` over the token-hash array — interpreted
-    but JVM-side AND re-evaluated per bit (no CSE in higher-order
-    functions); for anything beyond attaching one column, use
-    :func:`simhash_df` (explode→groupBy — each token hashed once)."""
-    words = F.filter(F.split(F.lower(text), "[ \\t\\n\\r]+"), lambda w: w != "")
-    hashes = F.transform(words, lambda w: F.xxhash64(w))
-
-    def _vote_fn(b: int):
-        # two-param closure, NOT a default-arg lambda (see _salted_hash)
-        return lambda acc, h: acc + F.when(
-            F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1, 1
-        ).otherwise(-1)
-
-    bit_cols = []
-    for bit in range(64):
-        vote = F.aggregate(hashes, F.lit(0), _vote_fn(bit))
-        bit_cols.append(
-            F.when(vote > 0, F.shiftleft(F.lit(1).cast("long"), bit)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    out = bit_cols[0]
-    for c in bit_cols[1:]:
-        out = out.bitwiseOR(c)
-    return out
-
-
 # ---------------------------------------------------------------------------
 # Exact all-pairs n-gram Jaccard (inverted-index join) + decontamination
 # ---------------------------------------------------------------------------
-
-
-def _dup_class_frame(base: DataFrame) -> DataFrame:
-    """Collapse an (id, shl) shingle frame to EXACT-DUPLICATE classes:
-    one row per distinct shingle ARRAY, with the sorted member-id list.
-
-    ``(cid, shl, ids, __f)`` where ``cid`` is the smallest member id.
-
-    Why: pairwise-similarity joins cost Σ f² join rows per shingle;
-    byte-identical documents (the dominant duplication mode in web
-    corpora — mirrors, re-crawls, boilerplate pages) all carry the SAME
-    shingle array, so every pairwise quantity (n_shared, jaccard, band
-    keys) is a function of the CLASS pair, not the doc pair. Grouping
-    first runs the quadratic stage at class grain and expands to doc
-    pairs only AFTER the similarity threshold — on a corpus where each
-    doc has r replicas this divides candidate volume by r², while the
-    expansion step emits exactly the rows the doc-grain join would
-    have. Equality is on the raw array (equal text ⇒ equal array);
-    permuted-equal shingle SETS simply stay in separate classes and
-    meet in the cross-class join — still exact, just unmerged.
-
-    The groupBy shuffles each document's shingle array once — the same
-    bytes the exploded inverted-index shuffle moves, so the extra
-    stage does not increase shuffle volume order."""
-    return (
-        base.groupBy("shl")
-        .agg(
-            F.array_sort(F.collect_list("id")).alias("ids"),
-            F.count(F.lit(1)).cast("long").alias("__f"),
-        )
-        .select(
-            F.element_at("ids", 1).alias("cid"), "shl", "ids", "__f"
-        )
-    )
-
-
-def _cross_class_pairs(ids_a: Column, ids_b: Column) -> Column:
-    """All (id_a, id_b) doc pairs between two DISTINCT classes, ordered
-    id_a < id_b per pair (ids never overlap across classes)."""
-    return F.flatten(
-        F.transform(
-            ids_a,
-            lambda x: F.transform(
-                ids_b,
-                lambda y: F.struct(
-                    F.least(x, y).alias("id_a"),
-                    F.greatest(x, y).alias("id_b"),
-                ),
-            ),
-        )
-    )
-
-
-def _intra_class_pairs(ids: Column) -> Column:
-    """All C(f,2) upper-triangle pairs within one class's SORTED id
-    list — id_a < id_b by construction."""
-    return F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.size(ids) - (i + 1)),
-                lambda y: F.struct(
-                    x.alias("id_a"), y.alias("id_b")
-                ),
-            ),
-        )
-    )
-
-
-def _banded_frame(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_n: int,
-    portable_hash: bool,
-) -> DataFrame:
-    """(id, band) LSH band keys per document — the shared
-    signature+banding stage (:func:`shingle_frame` +
-    :func:`_band_keys_expr`: one tokenization per row, per-row
-    signatures, no aggregate)."""
-    base = shingle_frame(df, id_col, text_col, shingle_n)
-    return base.select(
-        "id",
-        F.explode_outer(
-            _band_keys_expr(F.col("shl"), num_hashes, bands, portable_hash)
-        ).alias("band"),
-    )
 
 
 class _DefaultCap(int):
@@ -783,6 +659,75 @@ _DEFAULT_MAX_DOC_FREQ = _DefaultCap(1000)
 _default_cap_warned = False
 
 
+def _shingle_hash(hash_shingles: str | None):
+    """The shingle-key hash a ``hash_shingles`` option names: ``None``
+    (exact shingle strings), :func:`F.xxhash64` or
+    :func:`portable_token_hash`."""
+    if hash_shingles is None:
+        return None
+    if hash_shingles == "xxhash64":
+        return F.xxhash64
+    if hash_shingles == "portable":
+        return portable_token_hash
+    raise ValueError(
+        f"hash_shingles must be None, 'xxhash64' or 'portable', got "
+        f"{hash_shingles!r}"
+    )
+
+
+def _shared_shingle_counts(
+    base: DataFrame, max_doc_freq: int | None, hash_shingles: str | None
+) -> DataFrame:
+    """``(id_a, id_b, n_shared, n_a, n_b)`` for every pair id_a < id_b of
+    a :func:`shingle_frame` that shares at least one shingle: the
+    inverted-index self-join. A pair has any overlap iff it shares a
+    shingle, so joining the exploded (id, shingle) relation to itself
+    enumerates exactly the nonzero pairs — never the quadratic space.
+    ``n_a`` / ``n_b`` are the two set sizes.
+
+    ``max_doc_freq`` drops shingles in more than that many documents
+    before the self-join (posting-list cap: a shingle in f docs creates
+    f² join rows); ``hash_shingles`` joins on 64/60-bit shingle hashes
+    instead of the 20-40-byte strings (:func:`_shingle_hash`).
+
+    r6 plan shape, A/B-measured on the sf1.0 bench corpus (127M
+    co-occurrence rows through the pair aggregate):
+
+    * the pair aggregate carries ONLY the count — the Σf²-row partial
+      aggregation is the dominant cost, and keeping its rows/buffers
+      to (id_a, id_b, count) instead of also dragging both sizes
+      through ``max()`` buffers measured 8.9 s vs 14.6 s; the 50k-row
+      size table re-attaches by two explicitly-broadcast joins on the
+      million-fold-smaller aggregate OUTPUT (the explicit broadcast is
+      right up to ~10^8 docs — 16 B/doc of (id, n_sh); past that drop
+      the hint and the planner shuffle-joins the size table, still on
+      the post-aggregate pair counts);
+    * the self-join carries a SHUFFLE_HASH hint (8.9 s vs 23.7 s
+      against the planner's broadcast pick): the probe side must
+      anyway stream Σf² matches into the partial aggregate, and the
+      shuffle gives that aggregate full partition parallelism, while
+      the per-partition hash build side is |exploded|/partitions rows
+      — bounded; AQE skew-join still splits oversized partitions;
+    * each scan tokenizes once (:func:`shingle_frame`)."""
+    key = _shingle_hash(hash_shingles)
+    sizes = base.select("id", F.size("shl").cast("long").alias("n_sh"))
+    ex = base.select("id", F.explode_outer("shl").alias("s"))
+    if key is not None:
+        ex = ex.select("id", key(F.col("s")).alias("s"))
+    if max_doc_freq is not None:
+        freq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df_"))
+        ex = ex.join(freq, "s").where(F.col("df_") <= max_doc_freq).drop("df_")
+    a, b = ex.alias("a"), ex.hint("SHUFFLE_HASH").alias("b")
+    inter = (
+        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+    )
+    na = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
+    nb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
+    return inter.join(F.broadcast(na), "id_a").join(F.broadcast(nb), "id_b")
+
+
 def ngram_jaccard_all_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -791,14 +736,13 @@ def ngram_jaccard_all_pairs(
     threshold: float = 0.5,
     max_doc_freq: int | None = _DEFAULT_MAX_DOC_FREQ,
     hash_shingles: str | None = None,
-    collapse_exact_duplicates: bool = False,
 ) -> DataFrame:
     """Exact all-pairs n-gram Jaccard via an inverted-index self-join on
-    shingles. No blocking key is needed: a pair has Jaccard > 0 iff it
-    shares at least one shingle, so joining the exploded (id, shingle)
-    relation to itself enumerates exactly the nonzero pairs — never the
-    quadratic all-pairs space. Two shuffles (explode-join on shingle,
-    groupBy pair); sizes are broadcast-joined back.
+    shingles (:func:`_shared_shingle_counts`, which holds the plan
+    shape). No blocking key is needed: a pair has Jaccard > 0 iff it
+    shares at least one shingle. Two shuffles (explode-join on shingle,
+    groupBy pair); sizes are broadcast-joined back. Returns
+    ``(id_a, id_b, n_shared, jaccard)``, jaccard at 6 dp.
 
     ``max_doc_freq``: shingles occurring in more than this many documents
     are dropped before the self-join (standard posting-list cap — a
@@ -828,38 +772,6 @@ def ngram_jaccard_all_pairs(
     Reference parity: soda-core only counts duplicates
     (duplicate_check.py:58-343); pairwise similarity is the
     training-pipeline extension.
-
-    r6 plan shape, A/B-measured on the sf1.0 bench corpus (127M
-    co-occurrence rows through the pair aggregate):
-
-    * the pair aggregate carries ONLY the count — the Σf²-row partial
-      aggregation is the dominant cost, and keeping its rows/buffers
-      to (id_a, id_b, count) instead of also dragging both sizes
-      through ``max()`` buffers measured 8.9 s vs 14.6 s; the 50k-row
-      size table re-attaches by two explicitly-broadcast joins on the
-      million-fold-smaller aggregate OUTPUT (the explicit broadcast is
-      right up to ~10^8 docs — 16 B/doc of (id, n_sh); past that drop
-      the hint and the planner shuffle-joins the size table, still on
-      the post-aggregate pair counts);
-    * the self-join carries a SHUFFLE_HASH hint (8.9 s vs 23.7 s
-      against the planner's broadcast pick): the probe side must
-      anyway stream Σf² matches into the partial aggregate, and the
-      shuffle gives that aggregate full partition parallelism, while
-      the per-partition hash build side is |exploded|/partitions rows
-      — bounded; AQE skew-join still splits oversized partitions;
-    * each scan tokenizes once (:func:`shingle_frame`).
-
-    ``collapse_exact_duplicates=True`` groups byte-identical shingle
-    ARRAYS into classes first, runs the quadratic join at class grain
-    and expands doc pairs only after the threshold — provably identical
-    output (every pairwise quantity is a function of the class pair)
-    and candidate volume divided by r² on a corpus whose duplication is
-    r byte-identical replicas per doc (mirrors, re-crawls). Default
-    OFF: on corpora whose near-duplicates are PERTURBED (no
-    byte-identical mass) the class aggregate is pure overhead —
-    measured +11 % on the r6 sf1.0 bench corpus (49,943 distinct texts
-    of 50,000 docs), while a true 10×-replica corpus measures the r²
-    win. Choose by corpus: exact-dup-heavy → True.
     """
     if isinstance(max_doc_freq, _DefaultCap):
         global _default_cap_warned
@@ -877,40 +789,9 @@ def ngram_jaccard_all_pairs(
                 stacklevel=2,
             )
     base = shingle_frame(df, id_col, text_col, n)
-    if collapse_exact_duplicates:
-        return _jaccard_pairs_by_class(
-            base, threshold, max_doc_freq, hash_shingles
-        )
-    sizes = base.select("id", F.size("shl").cast("long").alias("n_sh"))
-    ex = base.select("id", F.explode_outer("shl").alias("s"))
-    if hash_shingles == "xxhash64":
-        ex = ex.select("id", F.xxhash64("s").alias("s"))
-    elif hash_shingles == "portable":
-        ex = ex.select("id", portable_token_hash(F.col("s")).alias("s"))
-    elif hash_shingles is not None:
-        raise ValueError(
-            f"hash_shingles must be None, 'xxhash64' or 'portable', got "
-            f"{hash_shingles!r}"
-        )
-    if max_doc_freq is not None:
-        freq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df_"))
-        ex = (
-            ex.join(freq, "s")
-            .where(F.col("df_") <= max_doc_freq)
-            .drop("df_")
-        )
-    a, b = ex.alias("a"), ex.hint("SHUFFLE_HASH").alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-    )
-    na = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
     jac = F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
     return (
-        inter.join(F.broadcast(na), "id_a")
-        .join(F.broadcast(nb), "id_b")
+        _shared_shingle_counts(base, max_doc_freq, hash_shingles)
         .where(jac >= threshold)
         .select(
             "id_a",
@@ -919,128 +800,6 @@ def ngram_jaccard_all_pairs(
             F.round(jac, 6).alias("jaccard"),
         )
     )
-
-
-def _jaccard_pairs_by_class(
-    base: DataFrame,
-    threshold: float,
-    max_doc_freq: int | None,
-    hash_shingles: str | None,
-) -> DataFrame:
-    """Class-grained exact all-pairs Jaccard — the
-    ``collapse_exact_duplicates=True`` path of
-    :func:`ngram_jaccard_all_pairs` (see there for when to use it)."""
-    # exact-duplicate classes first (see _dup_class_frame): the
-    # quadratic inverted-index join runs at CLASS grain; doc pairs are
-    # expanded only after the threshold. On an r-replica corpus this
-    # divides candidate volume by r² with provably identical output
-    # (every pairwise quantity is a function of the class pair).
-    cls = _dup_class_frame(base)
-    ex = cls.select(
-        "cid",
-        F.size("shl").cast("long").alias("n_sh"),
-        F.col("__f").alias("f"),
-        F.explode_outer("shl").alias("s"),
-    )
-    if hash_shingles == "xxhash64":
-        ex = ex.select("cid", "n_sh", "f", F.xxhash64("s").alias("s"))
-    elif hash_shingles == "portable":
-        ex = ex.select(
-            "cid", "n_sh", "f", portable_token_hash(F.col("s")).alias("s")
-        )
-    elif hash_shingles is not None:
-        raise ValueError(
-            f"hash_shingles must be None, 'xxhash64' or 'portable', got "
-            f"{hash_shingles!r}"
-        )
-    if max_doc_freq is not None:
-        # doc frequency = Σ class multiplicities (identical to the
-        # per-doc count the pre-class form aggregated)
-        freq = ex.groupBy("s").agg(F.sum("f").alias("df_"))
-        ex = (
-            ex.join(freq, "s")
-            .where(F.col("df_") <= max_doc_freq)
-            .drop("df_")
-        )
-        # surviving-shingle count per class: the intra-class pairs'
-        # n_shared under the cap (uncapped it equals n_sh)
-        kept = ex.groupBy("cid").agg(
-            F.count(F.lit(1)).cast("long").alias("__n_kept")
-        )
-    else:
-        kept = None
-    a, b = ex.alias("a"), ex.alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.cid") < F.col("b.cid")))
-        .groupBy(F.col("a.cid").alias("cid_a"), F.col("b.cid").alias("cid_b"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_shared"),
-            F.max(F.col("a.n_sh")).alias("n_a"),
-            F.max(F.col("b.n_sh")).alias("n_b"),
-        )
-    )
-    jac = F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
-    hits = inter.where(jac >= threshold)
-    ida = cls.select(F.col("cid").alias("cid_a"), F.col("ids").alias("ids_a"))
-    idb = cls.select(F.col("cid").alias("cid_b"), F.col("ids").alias("ids_b"))
-    cross = (
-        hits.join(ida, "cid_a")
-        .join(idb, "cid_b")
-        .select(
-            F.explode_outer(
-                _cross_class_pairs(F.col("ids_a"), F.col("ids_b"))
-            ).alias("__p"),
-            "n_shared",
-            F.round(jac, 6).alias("jaccard"),
-        )
-        .select(
-            F.col("__p.id_a").alias("id_a"),
-            F.col("__p.id_b").alias("id_b"),
-            "n_shared",
-            "jaccard",
-        )
-    )
-    # intra-class pairs: identical shingle sets share every (surviving)
-    # shingle — n_shared is n_sh (or the capped class's kept count); a
-    # pair with NO surviving shared shingle never appears (the doc-grain
-    # join would not have emitted it either)
-    multi = cls.where(F.col("__f") >= 2).select(
-        "cid", "ids", F.size("shl").cast("long").alias("n_sh")
-    )
-    if kept is not None:
-        # capped: n_shared is the class's surviving-shingle count (an
-        # AGGREGATED column, so this filter cannot be pushed below the
-        # class aggregate and re-inline the shingle pipeline)
-        multi = multi.join(kept, "cid")
-        ns = F.col("__n_kept")
-        jac_i = ns / (F.lit(2) * F.col("n_sh") - ns)
-        multi = multi.where((ns >= 1) & (jac_i >= threshold))
-        ns_out = ns
-        jac_out = F.round(jac_i, 6)
-    else:
-        # uncapped: every intra-class pair has jaccard EXACTLY 1.0
-        # (n/(n+n-n)); the threshold decision is a driver-side constant
-        # — a size(shl)-based row predicate here would be PUSHED below
-        # the class aggregate and re-inline the shingle expression into
-        # the scan filter (measured 36 split() calls)
-        if threshold > 1.0:
-            multi = multi.where(F.lit(False))
-        ns_out = F.col("n_sh")
-        jac_out = F.lit(1.0)
-    intra = (
-        multi.select(
-            F.explode_outer(_intra_class_pairs(F.col("ids"))).alias("__p"),
-            ns_out.alias("n_shared"),
-            jac_out.alias("jaccard"),
-        )
-        .select(
-            F.col("__p.id_a").alias("id_a"),
-            F.col("__p.id_b").alias("id_b"),
-            "n_shared",
-            "jaccard",
-        )
-    )
-    return cross.unionByName(intra)
 
 
 def ngram_containment_pairs(
@@ -1059,43 +818,15 @@ def ngram_containment_pairs(
     syndication, quoted posts, and wrapper pages around a shared body
     are exactly this shape.
 
-    Same inverted-index self-join and posting-cap scale guard as
-    :func:`ngram_jaccard_all_pairs` (a pair appears iff it shares a
-    shingle — never the quadratic space); output keeps BOTH directions
-    plus ``contained_id``, the side with the higher containment (ties →
-    the smaller document; the id a trim-or-drop policy acts on). Pairs
-    kept when max(containment_a, containment_b) ≥ ``threshold``.
-    Same r6 plan shape as :func:`ngram_jaccard_all_pairs` (A/B-measured
-    there): count-only pair aggregate — the Σf² partial-aggregation
-    rows/buffers are the dominant cost — with the size table
-    re-attached by broadcast joins on the aggregate OUTPUT, a
-    SHUFFLE_HASH self-join, and one tokenization per scan."""
+    Same inverted-index self-join, posting-cap scale guard and plan
+    shape as :func:`ngram_jaccard_all_pairs` (:func:`_shared_shingle_counts`;
+    a pair appears iff it shares a shingle — never the quadratic
+    space); output keeps BOTH directions plus ``contained_id``, the
+    side with the higher containment (ties → the smaller document; the
+    id a trim-or-drop policy acts on). Pairs kept when
+    max(containment_a, containment_b) ≥ ``threshold``."""
     base = shingle_frame(df, id_col, text_col, n)
-    sizes = base.select("id", F.size("shl").cast("long").alias("n_sh"))
-    ex = base.select("id", F.explode_outer("shl").alias("s"))
-    if hash_shingles == "xxhash64":
-        ex = ex.select("id", F.xxhash64("s").alias("s"))
-    elif hash_shingles == "portable":
-        ex = ex.select("id", portable_token_hash(F.col("s")).alias("s"))
-    elif hash_shingles is not None:
-        raise ValueError(
-            f"hash_shingles must be None, 'xxhash64' or 'portable', got "
-            f"{hash_shingles!r}"
-        )
-    if max_doc_freq is not None:
-        freq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df_"))
-        ex = (
-            ex.join(freq, "s").where(F.col("df_") <= max_doc_freq).drop("df_")
-        )
-    a, b = ex.alias("a"), ex.hint("SHUFFLE_HASH").alias("b")
-    inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-    )
-    na = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    inter = inter.join(F.broadcast(na), "id_a").join(F.broadcast(nb), "id_b")
+    inter = _shared_shingle_counts(base, max_doc_freq, hash_shingles)
     ca = F.col("n_shared") / F.col("n_a")
     cb = F.col("n_shared") / F.col("n_b")
     contained = F.when(ca > cb, F.col("id_a")).when(cb > ca, F.col("id_b")).otherwise(
@@ -1173,19 +904,10 @@ def decontaminate(
     )
     base = shingle_frame(df, id_col, text_col, n)
     ex = base.select("id", F.explode_outer("shl").alias("s"))
-    if hash_shingles == "xxhash64":
-        ex = ex.select("id", F.xxhash64("s").alias("s"))
-        bench_sh = bench_sh.select(F.xxhash64("s").alias("s")).distinct()
-    elif hash_shingles == "portable":
-        ex = ex.select("id", portable_token_hash(F.col("s")).alias("s"))
-        bench_sh = bench_sh.select(
-            portable_token_hash(F.col("s")).alias("s")
-        ).distinct()
-    elif hash_shingles is not None:
-        raise ValueError(
-            f"hash_shingles must be None, 'xxhash64' or 'portable', got "
-            f"{hash_shingles!r}"
-        )
+    key = _shingle_hash(hash_shingles)
+    if key is not None:
+        ex = ex.select("id", key(F.col("s")).alias("s"))
+        bench_sh = bench_sh.select(key(F.col("s")).alias("s")).distinct()
     marked = bench_sh.select("s", F.lit(1).alias("__hit"))
     per_doc = (
         ex.join(
@@ -1796,8 +1518,8 @@ def corpus_band_keys(
     (text and shingles never persist)."""
     return (
         _banded_frame(
-            df, text_col, id_col, num_hashes, bands, shingle_n,
-            portable_hash,
+            shingle_frame(df, id_col, text_col, shingle_n),
+            num_hashes, bands, portable_hash,
         )
         .select("band")
         .distinct()
@@ -1833,8 +1555,8 @@ def incremental_minhash_dedup(
     dedup_by_components)."""
     hits = (
         _banded_frame(
-            new_df, text_col, id_col, num_hashes, bands, shingle_n,
-            portable_hash,
+            shingle_frame(new_df, id_col, text_col, shingle_n),
+            num_hashes, bands, portable_hash,
         )
         .join(seen_bands.select("band"), "band", "left_semi")
         .select(F.col("id").alias(id_col))
@@ -2172,49 +1894,16 @@ def minhash_calibration(
     the INTEGER match count k (summed exactly; divided once by
     n·num_hashes at the end), and exact Jaccard aggregates as
     ``round(J·10⁶)`` integers — the q114 integer-sum discipline, so no
-    mean ever depends on float summation order. Scale shape: signatures
-    hash-once via the shared explode→min-agg stage; candidates come from
-    the same 16-byte band join as the dedup path; signature vectors
-    re-attach by two id-joins (num_hashes values per side, once per
-    pair)."""
-    rows = num_hashes // bands
-    base = shingle_frame(df, id_col, text_col, shingle_n).withColumnRenamed(
-        "shl", "sh"
-    )
-    # signatures as per-row array_min expressions over the materialized
-    # shingle attribute (the r6 minhash_near_duplicates shape — no
-    # explode → groupBy(id) aggregate, no portable-mode SortAggregate)
-    if portable_hash:
-        sig_exprs = [
-            F.array_min(F.transform(F.col("sh"), _md5_salted(i))).alias(
-                f"m{i}"
-            )
-            for i in range(num_hashes)
-        ]
-    else:
-        sig_exprs = [
-            F.array_min(F.transform(F.col("sh"), _salted_hash(i))).alias(
-                f"m{i}"
-            )
-            for i in range(num_hashes)
-        ]
-    sig = base.select("id", *sig_exprs)
-    banded = base.select(
-        "id",
-        F.explode_outer(
-            _band_keys_expr(F.col("sh"), num_hashes, bands, portable_hash)
-        ).alias("band"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    mean ever depends on float summation order. Scale shape: the
+    signatures and candidate pairs of :func:`minhash_near_duplicates`
+    (:func:`_minhash_mins`, :func:`_band_candidate_pairs`); signature
+    vectors and shingle arrays re-attach by id-joins (num_hashes values
+    per side, once per pair). Raises ``ValueError`` unless
+    ``1 <= bands <= num_hashes``."""
+    base = shingle_frame(df, id_col, text_col, shingle_n)
+    pairs = _band_candidate_pairs(base, num_hashes, bands, portable_hash)
+    mins = _minhash_mins(F.col("shl"), num_hashes, portable_hash)
+    sig = base.select("id", *[m.alias(f"m{i}") for i, m in enumerate(mins)])
     sig_a = sig.select(
         F.col("id").alias("id_a"),
         *[F.col(f"m{i}").alias(f"a{i}") for i in range(num_hashes)],
@@ -2223,18 +1912,14 @@ def minhash_calibration(
         F.col("id").alias("id_b"),
         *[F.col(f"m{i}").alias(f"b{i}") for i in range(num_hashes)],
     )
-    sh_a = base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sh_b = base.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    j = pairs.join(sig_a, "id_a").join(sig_b, "id_b").join(sh_a, "id_a").join(
-        sh_b, "id_b"
+    j = _attach_shingles(
+        pairs.join(sig_a, "id_a").join(sig_b, "id_b"), base, "shl"
     )
     est_k = sum(
         F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
         for i in range(num_hashes)
     ).cast("long")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    jac = inter / union
+    jac = _jaccard(F.col("sh_a"), F.col("sh_b"))
     binned = j.select(
         F.least(F.floor(jac * 10), F.lit(9)).cast("long").alias("jaccard_bin"),
         est_k.alias("__k"),
@@ -3001,7 +2686,8 @@ def prefix_filter_jaccard(
          per-doc array rebuild — no global rank window);
       3. prefix explode → self-join on shingle + size filter
          (t·s_a ≤ s_b ≤ s_a/t), distinct candidate pairs;
-      4. exact verify on the full arrays.
+      4. exact verify on the full arrays (:func:`_attach_shingles`,
+         :func:`_jaccard` — the verify step of the MinHash path).
     The ⌈t·s⌉ terms subtract 1e-9 before ceil so float representation
     of t can only ENLARGE a prefix/window (more candidates, never a
     missed pair — losslessness survives floating point).
@@ -3019,14 +2705,12 @@ def prefix_filter_jaccard(
     # (trimmed length > 0) is exactly the former size(sh) > 0 guard —
     # a doc has ≥ 1 shingle iff it has ≥ 1 word iff its trimmed text
     # is non-empty
-    docs = shingle_frame(df, id_col, text_col, n).withColumnRenamed(
-        "shl", "sh"
-    )
+    docs = shingle_frame(df, id_col, text_col, n)
     # duplicate-id policy: a document's shingle set is the distinct
     # UNION over all rows sharing the id (byte-identical replica rows
     # collapse to one set; without this, replicas double df counts and
     # fan out the verify join)
-    tok = docs.select("id", F.explode_outer("sh").alias("s")).distinct()
+    tok = docs.select("id", F.explode_outer("shl").alias("s")).distinct()
     dfreq = tok.groupBy("s").agg(
         F.count(F.lit(1)).cast("long").alias("df")
     )
@@ -3075,21 +2759,13 @@ def prefix_filter_jaccard(
     # the rebuilt rarest-first arrays ARE the full distinct sets —
     # set-intersection/union don't care about order, and reusing them
     # avoids a second scan of the raw docs
-    full = ordered.select("id", F.col("sh").alias("full_sh"))
-    verified = (
-        cand.join(full.withColumnRenamed("id", "id_a")
-                  .withColumnRenamed("full_sh", "sh_a"), "id_a")
-        .join(full.withColumnRenamed("id", "id_b")
-              .withColumnRenamed("full_sh", "sh_b"), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
     return (
-        verified.select(
+        _attach_shingles(cand, ordered, "sh")
+        .select(
             "id_a", "id_b",
             F.size("sh_a").cast("long").alias("size_a"),
             F.size("sh_b").cast("long").alias("size_b"),
-            F.round(inter / union, 6).alias("jaccard"),
+            F.round(_jaccard(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard"),
         )
         .where(F.col("jaccard") >= t)
         .orderBy("id_a", "id_b")

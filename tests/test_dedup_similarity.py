@@ -9,7 +9,7 @@ from soda_core_spark.operators.dedup import (
     exact_dedup,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
-    simhash64,
+    simhash_df,
 )
 from soda_core_spark.operators.similarity import brute_force_topk, lsh_topk
 
@@ -67,9 +67,27 @@ def test_ngram_jaccard_exact_blocking(docs):
     assert (1, 2) in found
 
 
+def test_minhash_banding_rejects_bands_outside_1_to_num_hashes(docs):
+    """More bands than hashes leaves 0 rows per band: every document
+    would get the same constant band keys and the band join would turn
+    into all-pairs. bands=0 used to surface as ZeroDivisionError. Both
+    are refused while the plan is built, before any Spark job."""
+    from soda_core_spark.operators.dedup import (
+        corpus_band_keys,
+        minhash_calibration,
+    )
+
+    for num_hashes, bands in ((4, 8), (16, 0)):
+        with pytest.raises(ValueError, match="bands <= num_hashes"):
+            minhash_near_duplicates(docs, num_hashes=num_hashes, bands=bands)
+        with pytest.raises(ValueError, match="bands <= num_hashes"):
+            minhash_calibration(docs, num_hashes=num_hashes, bands=bands)
+        with pytest.raises(ValueError, match="bands <= num_hashes"):
+            corpus_band_keys(docs, num_hashes=num_hashes, bands=bands)
+
+
 def test_simhash_near_for_near_dups(docs):
-    rows = docs.select("doc_id", simhash64(F.col("text")).alias("sh")).collect()
-    sh = {r.doc_id: r.sh for r in rows}
+    sh = {r.doc_id: r.simhash for r in simhash_df(docs).collect()}
     assert sh[1] == sh[2]  # identical text → identical simhash
     ham_near = bin(sh[1] ^ sh[4]).count("1")
     ham_far = bin(sh[1] ^ sh[5]).count("1")
@@ -1277,56 +1295,3 @@ def test_design_effect_cross_source_duplication_penalized(spark):
     # ess = (9*.1 + 10)^2 / (9*.01 + 10) = 118.81/10.09
     assert o.ess == pytest.approx(118.81 / 10.09, abs=1e-3)
     assert o.deff > 1.5
-
-
-def test_jaccard_collapse_exact_duplicates_equivalence(spark):
-    """collapse_exact_duplicates=True must produce the identical pair
-    set on a corpus WITH byte-identical replicas (the corpus class the
-    flag exists for) — including intra-replica pairs at jaccard 1.0 and
-    cross-class pairs, with and without the posting cap."""
-    from soda_core_spark.operators.dedup import ngram_jaccard_all_pairs
-
-    texts = [
-        "alpha beta gamma delta epsilon zeta",
-        "alpha beta gamma delta epsilon eta",
-        "one two three four five six seven",
-        "completely different words here now",
-    ]
-    rows = []
-    rid = 0
-    for t in texts:
-        for _ in range(3):  # 3 byte-identical replicas each
-            rows.append((rid, t))
-            rid += 1
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def norm(out):
-        return sorted(
-            (r["id_a"], r["id_b"], r["n_shared"], r["jaccard"])
-            for r in out.collect()
-        )
-
-    by_cap = {}
-    for cap in (None, 4):
-        plain = norm(
-            ngram_jaccard_all_pairs(
-                df, threshold=0.2, max_doc_freq=cap
-            )
-        )
-        byclass = norm(
-            ngram_jaccard_all_pairs(
-                df,
-                threshold=0.2,
-                max_doc_freq=cap,
-                collapse_exact_duplicates=True,
-            )
-        )
-        assert plain == byclass, (cap, plain, byclass)
-        by_cap[cap] = plain
-    # uncapped: replicas of one text must appear as jaccard-1.0 pairs
-    ones = [p for p in by_cap[None] if p[3] == 1.0]
-    assert len(ones) >= 4 * 3  # 4 classes x C(3,2) pairs
-    # cap=4 keeps within-class shingles (f=3) but drops the shared
-    # 'alpha beta gamma'-prefix shingles (f=6) -> capped differs from
-    # uncapped, proving the capped branch is exercised on both paths
-    assert by_cap[4] != by_cap[None]

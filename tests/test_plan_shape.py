@@ -142,34 +142,45 @@ def test_decontamination_broadcasts_benchmark(spark):
     assert plan.count("Location: InMemoryFileIndex") == 2, plan
 
 
-def test_minhash_signatures_no_sort_aggregate(spark):
+@pytest.mark.parametrize(
+    "query", ["q18_minhash_near_dups", "q118_minhash_calibration"]
+)
+def test_minhash_signatures_no_sort_aggregate(spark, query):
     """r6: MinHash signatures are per-row array_min expressions over the
     materialized shingle array — no explode → groupBy(id) aggregation
     stage at all. In portable (md5) mode the old aggregate was worse
     than a shuffle: min over md5 STRINGS has no mutable hash-agg
     buffer, so Spark ran Sort + SortAggregate over the full exploded
-    shingle set, twice per self-join side. Pin both gone."""
+    shingle set, twice per self-join side. Pin both gone on every
+    query built on the shared signature builder."""
     from soda_core_spark.entry_queries import REGISTRY
 
-    plan = _plan(REGISTRY["q18_minhash_near_dups"][0](spark, SF))
+    plan = _plan(REGISTRY[query][0](spark, SF))
     assert "SortAggregate" not in plan, plan
     assert "array_min" in plan, plan
 
 
-def test_shingle_frame_single_tokenization(spark):
-    """The q33 inverted-index plan must tokenize each document ONCE per
+@pytest.mark.parametrize(
+    "query", ["q33_ngram_jaccard_pairs", "q96_containment_pairs"]
+)
+def test_shingle_frame_single_tokenization(spark, query):
+    """The inverted-index plans must tokenize each document ONCE per
     scan — before r6 the inline shingle expression carried ~9 split()
     calls per evaluation and plan rules (InferFiltersFromGenerate,
-    filter pushdown) inlined it into scan filters on top. Also pin the
-    A/B-measured join/aggregate shape: SHUFFLE_HASH self-join (not the
-    planner's broadcast pick) and a count-only pair aggregate with the
-    size table re-attached by broadcast joins on the aggregate
-    output."""
+    filter pushdown) inlined it into scan filters on top. q96's input
+    is a union of two scans (documents + injected excerpts) tokenized
+    once after the union, so it carries one split() per scan pair.
+    Also pin the A/B-measured join/aggregate shape of the shared
+    pair-count stage: SHUFFLE_HASH self-join (not the planner's
+    broadcast pick) and a count-only pair aggregate with the size
+    table re-attached by broadcast joins on the aggregate output."""
     from soda_core_spark.entry_queries import REGISTRY
 
-    plan = _plan(REGISTRY["q33_ngram_jaccard_pairs"][0](spark, SF))
+    plan = _plan(REGISTRY[query][0](spark, SF))
+    scans_per_input = 2 if query == "q96_containment_pairs" else 1
     n_scans = plan.count("Location: InMemoryFileIndex")
-    assert plan.count("split(") == n_scans, plan
+    assert n_scans > 0 and n_scans % scans_per_input == 0, plan
+    assert plan.count("split(") == n_scans // scans_per_input, plan
     assert "ShuffledHashJoin" in plan, plan
     # pair aggregate carries ONLY the count — no max(n_sh) buffers
     assert "partial_max" not in plan, plan
