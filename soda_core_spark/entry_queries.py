@@ -947,19 +947,20 @@ def _q20_sql() -> str:
 
 @register("q20_langid_scores", _q20_sql())
 def q20(spark, sf_dir):
-    """Vectorized language-ID pandas UDF over documents + agreement with
-    the declared lang column. The model (function-word sets) is shared as
-    data with the DuckDB oracle, which re-derives scores/argmax in SQL —
-    exact integer counts, so the cross-engine compare is exact."""
-    from soda_core_spark.functions.langid import langid_udf
+    """Language ID over documents (the pipeline's JVM word-set scorer,
+    ``attach_langid_jvm``) + agreement with the declared lang column. The
+    model (function-word sets) is shared as data with the DuckDB oracle,
+    which re-derives scores/argmax in SQL — exact integer counts, so the
+    cross-engine compare is exact."""
+    from soda_core_spark.functions.langid import attach_langid_jvm
 
     d = _t(spark, sf_dir, "documents")
-    out = d.withColumn("_lid", langid_udf(F.col("text")))
+    out = attach_langid_jvm(d, "text")
     return out.select(
         "doc_id",
-        F.col("_lid.langid_pred").alias("langid_pred"),
-        F.round(F.col("_lid.langid_conf"), 6).alias("langid_conf"),
-        (F.col("_lid.langid_pred") == F.col("lang")).alias("agrees"),
+        "langid_pred",
+        F.round(F.col("langid_conf"), 6).alias("langid_conf"),
+        (F.col("langid_pred") == F.col("lang")).alias("agrees"),
     )
 
 
@@ -1004,13 +1005,14 @@ def _q21_sql() -> str:
 
 @register("q21_scrub", _q21_sql())
 def q21(spark, sf_dir):
-    """PII/toxicity scrub (Python-re pandas UDF) with deterministic PII
-    injected per row — including an Arabic-Indic-digit SSN that only the
-    Unicode digit-fold pre-pass catches — so the cross-engine oracle
-    exercises every rule AND the fold on every document; byte-identical
-    output is the north-rule criterion. The UDF folds internally; the
-    oracle folds via DuckDB translate() with the shared FROM/TO tables."""
-    from soda_core_spark.functions.scrub import pii_count_udf, scrub_udf
+    """PII/toxicity scrub (the pipeline's Python-re delta UDF, coalesced
+    with the input: ``scrub.scrubbed``) with deterministic PII injected
+    per row — including an Arabic-Indic-digit SSN that only the Unicode
+    digit-fold pre-pass catches — so the cross-engine oracle exercises
+    every rule AND the fold on every document; byte-identical output is
+    the north-rule criterion. The UDF folds internally; the oracle folds
+    via DuckDB translate() with the shared FROM/TO tables."""
+    from soda_core_spark.functions.scrub import pii_count_udf, scrubbed
 
     d = _t(spark, sf_dir, "documents")
     text2 = F.concat(
@@ -1023,7 +1025,7 @@ def q21(spark, sf_dir):
     )
     return d.select(
         "doc_id",
-        scrub_udf(text2).alias("text_scrubbed"),
+        scrubbed(text2).alias("text_scrubbed"),
         pii_count_udf(text2).alias("pii_hits"),
     )
 
@@ -1081,15 +1083,18 @@ def _q22_sql() -> str:
 
 @register("q22_perplexity", _q22_sql())
 def q22(spark, sf_dir):
-    """Char-trigram perplexity scoring (vectorized pandas UDF); the DuckDB
-    oracle re-trains the identical model from the shared seed corpus and
-    re-scores every document in SQL."""
-    from soda_core_spark.functions.perplexity import perplexity_udf
+    """Char-trigram perplexity scoring, the pipeline's form: JVM
+    normalization (``normalized_for_ppl``), then a pandas UDF gathers the
+    trigram log-probs; the DuckDB oracle re-trains the identical model
+    from the shared seed corpus and re-scores every document in SQL."""
+    from soda_core_spark.functions.perplexity import (
+        normalized_for_ppl,
+        perplexity_prenorm_udf,
+    )
 
     d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id", F.round(perplexity_udf(F.col("text")), 6).alias("log_ppl")
-    )
+    ppl = perplexity_prenorm_udf(normalized_for_ppl(F.col("text")))
+    return d.select("doc_id", F.round(ppl, 6).alias("log_ppl"))
 
 
 

@@ -1,7 +1,4 @@
-"""Language identification — a fastText-style classifier stand-in, run as a
-vectorized (Arrow-batched) pandas UDF. No per-row Python UDFs: scoring is
-pandas ``explode`` + ``isin`` + groupby over the whole Arrow batch
-(BASELINE.json "no per-row Python").
+"""Language identification — a fastText-style classifier stand-in.
 
 The model: per-language stopword/function-word sets (public knowledge —
 standard high-frequency word lists). Score(lang) = fraction of lowercased
@@ -9,10 +6,10 @@ tokens found in that language's set; prediction = argmax, confidence = the
 winning score. Deterministic, dependency-free, and shared (as *model data*,
 not inference code) with the plain-pandas oracle.
 
-Executor lifecycle mirrors the real-fastText pattern: the model table is a
-module-level constant loaded once per executor process at import, never
-per batch — swap ``LANG_WORDS``/``score_batch`` for a real
-``fasttext.load_model`` in production, the Spark plumbing is identical.
+The Spark implementation is :func:`attach_langid_jvm`: each language's
+score is a JVM membership filter over the lowered token array (codegen,
+no Python, no Arrow traffic). :func:`score_batch` is the plain-pandas
+reference the tests compare it against; it is not a Spark code path.
 """
 
 from __future__ import annotations
@@ -20,10 +17,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
-from soda_core_spark.functions.text import EN_STOPWORDS
+from soda_core_spark.functions.text import EN_STOPWORDS, words_col
 
 #: frozen per-language function-word sets (model weights, in effect)
 LANG_WORDS: dict[str, frozenset[str]] = {
@@ -61,14 +56,6 @@ LANG_WORDS: dict[str, frozenset[str]] = {
 }
 
 LANGS: tuple[str, ...] = tuple(sorted(LANG_WORDS))
-
-LANGID_SCHEMA = T.StructType(
-    [
-        T.StructField("langid_pred", T.StringType()),
-        T.StructField("langid_conf", T.DoubleType()),
-    ]
-)
-
 
 #: token → language bitmask (bit i = membership in LANGS[i]'s set) — turns
 #: per-language set probes into ONE dict map over the exploded tokens
@@ -109,11 +96,6 @@ def score_batch(texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"langid_pred": pred, "langid_conf": conf.astype(float)})
 
 
-@pandas_udf(LANGID_SCHEMA)
-def langid_udf(texts: pd.Series) -> pd.DataFrame:
-    return score_batch(texts)
-
-
 def attach_langid_jvm(df, text_col: str = "text", lowered_tokens_col: str | None = None):
     """Attach ``langid_pred``/``langid_conf`` via the JVM model, staged so
     every expensive piece is evaluated exactly once per row: the lowered
@@ -131,15 +113,11 @@ def attach_langid_jvm(df, text_col: str = "text", lowered_tokens_col: str | None
         df = df.withColumnRenamed(lowered_tokens_col, "__wl")
     else:
         text = F.coalesce(F.col(text_col), F.lit(""))
-        wl = F.filter(F.split(F.lower(text), "[ \\t\\n\\r]+"), lambda w: w != "")
-        df = df.withColumn("__wl", wl)
-    n = F.size(F.col("__wl"))
-    fcols = {}
-    for lang in LANGS:
-        hits = F.size(F.filter(F.col("__wl"), _member_fn(LANG_WORDS[lang])))
-        fcols[f"__lid_{lang}"] = F.when(
-            n > 0, hits.cast("double") / n.cast("double")
-        ).otherwise(F.lit(0.0))
+        df = df.withColumn("__wl", words_col(F.lower(text)))
+    fcols = {
+        f"__lid_{lang}": frac
+        for lang, frac in _lang_fractions(F.col("__wl")).items()
+    }
     df = df.withColumns(fcols)
     df = df.withColumn(
         "langid_conf", F.greatest(*[F.col(f"__lid_{lang}") for lang in LANGS])
@@ -159,8 +137,10 @@ def _member_fn(word_set: frozenset[str]):
     return lambda t: t.isin(words_list)
 
 
-def langid_jvm_from_words(lowered_words: Column) -> dict[str, Column]:
-    """JVM langid over an already-lowercased token array column."""
+def _lang_fractions(lowered_words: Column) -> dict[str, Column]:
+    """Per language, the fraction of the lowered tokens in its word set;
+    0.0 for an empty array. Counts are exact integers and the division
+    is one IEEE double per language, as in :func:`score_batch`."""
     n = F.size(lowered_words)
     fracs = {}
     for lang in LANGS:
@@ -168,11 +148,7 @@ def langid_jvm_from_words(lowered_words: Column) -> dict[str, Column]:
         fracs[lang] = F.when(
             n > 0, hits.cast("double") / n.cast("double")
         ).otherwise(F.lit(0.0))
-    conf = F.greatest(*fracs.values()) if len(fracs) > 1 else next(iter(fracs.values()))
-    pred = F.when(conf <= 0.0, F.lit("und"))
-    for lang in LANGS:  # first max in sorted-lang order == pandas idxmax
-        pred = pred.when(fracs[lang] == conf, F.lit(lang))
-    return {"langid_pred": pred, "langid_conf": conf}
+    return fracs
 
 
 def lang_stopword_density(lowered_words: Column, lang: Column) -> Column:
@@ -189,14 +165,10 @@ def lang_stopword_density(lowered_words: Column, lang: Column) -> Column:
     zero-quality; token-less documents yield 0.0 like the monolingual
     form. 6 dp rounding pins the integer/integer division cross-engine.
     """
-    n = F.size(lowered_words)
+    fracs = _lang_fractions(lowered_words)
     result = None
     for L in LANGS:
-        hits = F.size(F.filter(lowered_words, _member_fn(LANG_WORDS[L])))
-        d = F.when(
-            n > 0,
-            F.round(hits.cast("double") / n.cast("double"), 6),
-        ).otherwise(F.lit(0.0))
+        d = F.round(fracs[L], 6)
         result = (
             F.when(lang == L, d) if result is None else result.when(lang == L, d)
         )
@@ -222,26 +194,20 @@ def paragraph_lang_profile(
     ``n_other`` (paragraphs predicted as any other language, 'und'
     included), ``other_fraction`` (6 dp).
 
-    Shape for scale: paragraphs posexplode from the page (linear, no
-    corpus state), prediction is the same JVM-codegen membership scoring
-    as :func:`langid_jvm_from_words` (zero Python, zero Arrow), and the
-    rollup is ONE groupBy(doc, lang) with map-side partial aggregation
+    Shape for scale: paragraphs explode from the page (linear, no corpus
+    state), prediction is :func:`attach_langid_jvm` over the exploded
+    paragraphs (JVM codegen, zero Python, zero Arrow), and the rollup is
+    ONE groupBy(doc, lang) with map-side partial aggregation
     followed by a per-doc ``max_by`` over a (count, priority) struct —
     the struct key is unique per language so the argmax is exact, no
     window, no second shuffle wider than one row per (doc, lang).
     """
     text = F.coalesce(F.col(text_col), F.lit(""))
     paras = F.filter(F.split(text, "\\n\\n+"), lambda p: F.trim(p) != "")
-    exploded = df.select(
-        F.col(id_col), F.explode(paras).alias("__para")
-    )
-    wl = F.filter(
-        F.split(F.lower(F.col("__para")), "[ \\t\\n\\r]+"),
-        lambda w: w != "",
-    )
-    pred = langid_jvm_from_words(wl)["langid_pred"]
+    exploded = df.select(F.col(id_col), F.explode(paras).alias("__para"))
+    scored = attach_langid_jvm(exploded, "__para")
     counts = (
-        exploded.select(F.col(id_col), pred.alias("__plang"))
+        scored.select(F.col(id_col), F.col("langid_pred").alias("__plang"))
         .groupBy(id_col, "__plang")
         .agg(F.count(F.lit(1)).cast("long").alias("__cnt"))
     )

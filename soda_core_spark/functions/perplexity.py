@@ -4,10 +4,14 @@ A real pipeline loads a KenLM binary per executor and scores Arrow batches;
 the model binary isn't available in this container, so the stand-in is a
 deterministic **character-trigram language model** trained at import time
 on a small embedded seed corpus (public-domain-style English sentences
-written for this repo). The Spark-side plumbing — iterator-form pandas UDF
-so the model is built once per executor python worker, Arrow batches, no
-per-row Python UDF — is exactly the production shape; only ``_MODEL`` would
-change.
+written for this repo). Only ``_MODEL``/``_TABLE`` would change for a real
+model.
+
+The Spark implementation is ``perplexity_prenorm_udf(normalized_for_ppl(
+text))``: normalization runs JVM-side and only the normalized a-z text
+crosses Arrow, where the per-document work is one numpy gather over the
+dense trigram table. :func:`doc_log_perplexity` over the dict model is the
+plain-Python reference.
 
 Perplexity = exp(mean over char trigrams of −log P(c3 | c1 c2)) with
 add-k smoothing. English-like text scores low (< ~25 on this model),
@@ -119,7 +123,6 @@ def _char_lut() -> "np.ndarray":
 
 _TABLE = _build_table()
 _CHAR_LUT = _char_lut()
-_NOT_ALPHA = r"[^a-z ]"
 
 
 def doc_log_perplexity(text: str) -> float:
@@ -141,37 +144,13 @@ def doc_log_perplexity(text: str) -> float:
     return total / n
 
 
-def score_batch(texts: pd.Series) -> pd.Series:
-    """Score an Arrow batch via the dense table: normalization is
-    vectorized pandas string ops over the whole batch; per document the
-    trigram walk is ONE numpy gather + mean (no Python loop over chars)."""
-    s = texts.fillna("").str.lower().str.replace(_NOT_ALPHA, " ", regex=True)
-    s = s.str.split().str.join(" ")
-    out = np.full(len(s), 20.0, dtype=np.float64)
-    table, lut, v2, v = _TABLE, _CHAR_LUT, _V * _V, _V
-    for i, body in enumerate(s.to_numpy(dtype=object)):
-        if len(body) < 3:
-            continue
-        ix = lut[np.frombuffer(body.encode("ascii"), dtype=np.uint8)]
-        out[i] = -table[ix[:-2] * v2 + ix[1:-1] * v + ix[2:]].mean()
-    return pd.Series(out, index=texts.index)
-
-
-@pandas_udf(T.DoubleType())
-def perplexity_udf(texts: pd.Series) -> pd.Series:
-    # plain scalar form (not iterator): the model is a module-level table
-    # loaded once per worker at import anyway, and scalar pandas UDFs of
-    # the same eval type FUSE into one ArrowEvalPython node with the other
-    # scorers — one Arrow round-trip for langid+ppl+scrub instead of three
-    return score_batch(texts)
-
-
 def normalized_for_ppl(text: Column) -> Column:
-    """JVM twin of the UDF's normalization: lowercase, non-[a-z ] → space,
-    collapse runs, trim — verified byte-identical to the pandas form over
-    the full 1.6M-doc corpus (0 mismatches). Whole-stage codegen, so the
-    ~70 % of UDF time the pandas string ops cost (measured 2.57 s of
-    3.64 s per 100 k docs single-thread) moves out of Python entirely."""
+    """JVM twin of ``_normalize`` + whitespace-collapse: lowercase,
+    non-[a-z ] → space, trim, collapse runs; NULL text normalizes to ''.
+    Verified byte-identical to the Python normalization over the full
+    1.6M-doc corpus (0 mismatches). Whole-stage codegen, so the ~70 % of
+    scoring time the string ops cost (measured 2.57 s of 3.64 s per
+    100 k docs single-thread in pandas) stays out of Python."""
     from pyspark.sql import functions as F
 
     t = F.coalesce(text, F.lit(""))
@@ -211,18 +190,6 @@ def perplexity_prenorm_udf(normalized: pd.Series) -> pd.Series:
 # sum over the trigram counts.
 
 
-def normalized_body_col(text: Column) -> Column:
-    """The JVM twin of ``_normalize`` + whitespace-collapse: lowercase,
-    non-[a-z ] → space, runs collapsed, trimmed."""
-    from pyspark.sql import functions as F
-
-    return F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(text), "[^a-z ]", " "), " +", " "
-        )
-    )
-
-
 def train_char_trigram_lm(df, text_col: str = "text", k: float = _K):
     """Train the add-k char-trigram LM on a corpus — returns a sparse
     DataFrame (trigram, cnt, ctx_cnt, logp) with
@@ -242,7 +209,7 @@ def train_char_trigram_lm(df, text_col: str = "text", k: float = _K):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    body = normalized_body_col(F.col(text_col))
+    body = normalized_for_ppl(F.col(text_col))
     tris = F.expr(
         "transform(sequence(1, greatest(length(__body) - 2, 0)),"
         " i -> substring(__body, i, 3))"
@@ -317,7 +284,8 @@ def sentence_trim_udf(threshold: float):
     Returns a pandas UDF producing
     ``struct<cleaned:string, n_sentences:int, n_kept:int>`` — cleaned is
     NULL when nothing survives. Row-local (zero shuffle); Arrow-batched;
-    numpy trigram gather per sentence."""
+    each sentence is scored in plain Python over the dict model (one
+    dict lookup per trigram), not by a numpy table gather."""
     thr = float(threshold)
 
     @pandas_udf("struct<cleaned:string, n_sentences:int, n_kept:int>")

@@ -5,9 +5,12 @@ Byte-identical output per url is an acceptance criterion
 main parity hazard (SURVEY §7.2 step 6). So the scrub runs **inside a
 vectorized pandas UDF using Python ``re``** (via pandas ``str.replace``,
 Arrow-batched) — the oracle scrubs with the same engine, so semantics are
-pinned by construction. The rule *table* below is the shared contract;
-the two inference paths (pandas vectorized vs plain-Python loop) are
-independent code.
+pinned by construction. The rule *table* below is the shared contract.
+
+The Spark implementation is :func:`scrubbed`, i.e.
+``coalesce(scrub_delta_udf(text), text)``: the UDF returns only the rows
+the scrub changes, so unchanged text never crosses Arrow on the way back.
+:func:`scrub_text` is the independent plain-Python reference.
 
 soda-core has no scrub operator — its closest machinery is the per-row
 failed-rows condition (failed_rows_check.py:47-259); scrubbing is the
@@ -215,58 +218,24 @@ def _candidate_mask(texts: pd.Series) -> pd.Series:
     return _contains_mask(texts, _CAN_MATCH_RE2, _candidate_mask_re)
 
 
-def can_match_col(text: "Column") -> "Column":
-    """JVM-side CONSERVATIVE SUPERSET of the Python prefilter: a row that
-    fails this cannot be changed by any scrub rule (every PII rule needs
-    a digit or '@'; toxicity needs one of the lexicon words — matched
-    here as substrings, a superset of the whole-word Python test, so
-    extra candidates just scrub to an unchanged string). Unicode digits
-    count too: the digit-fold pass can change any row containing one, so
-    the class embeds DIGIT_FOLD_FROM verbatim (Java regex handles
-    supplementary chars in classes per code point). Masking the UDF
-    input with ``F.when(can_match_col(t), t)`` ships NULL for the ~80 %
-    of rows with no candidate bytes — they never cross Arrow at all."""
-    from pyspark.sql import functions as F
-
-    tox = "|".join(re.escape(w) for w in TOXICITY_LEXICON)
-    return text.rlike("[0-9@" + DIGIT_FOLD_FROM + "]") | F.lower(text).rlike(tox)
-
-
-def scrub_batch(texts: pd.Series) -> pd.Series:
-    """Vectorized scrub over an Arrow batch: detector prefilter, then one
-    pandas ``str.replace`` (Python re) per rule over the candidate rows
-    only. Rule ORDER is semantic (sequential passes) — do not merge the
-    patterns into one alternation; leftmost-match-wins across rules would
-    diverge from sequential semantics on adjacent matches.
-
-    Digit fold runs first; a folded row always contains an ASCII digit
-    afterwards, so it is a candidate by construction and the folded form
-    reaches the output even when no rule fires."""
-    texts = _fold_digits(texts)
-    candidates = _candidate_mask(texts)
-    if not candidates.any():
-        return texts
-    out = texts.copy()
-    sub = texts[candidates]
-    for _, rx, repl in _COMPILED:
-        sub = sub.str.replace(rx, repl, regex=True)
-    out[candidates] = sub
-    return out
-
-
 def scrub_delta_batch(texts: pd.Series) -> pd.Series:
-    """Like :func:`scrub_batch` but returns NULL for every row the scrub
-    leaves byte-identical — the Arrow return batch then carries only the
-    CHANGED rows' bytes (a few % of corpus text) instead of echoing the
-    whole column back to the JVM. Reconstruct the full column with
-    ``F.coalesce(scrub_delta_udf(text), text)`` — byte-identical to
-    scrubbing every row, at a fraction of the Python→JVM traffic. This is
-    the memory-bandwidth-bound-pipeline optimization: same regex work,
-    ~10× fewer bytes crossing Arrow on the way out.
+    """Vectorized scrub over an Arrow batch that returns NULL for every
+    row the scrub leaves byte-identical — the Arrow return batch then
+    carries only the CHANGED rows' bytes (a few % of corpus text) instead
+    of echoing the whole column back to the JVM. :func:`scrubbed`
+    reconstructs the full column as ``coalesce(delta, text)``.
 
-    "Changed" compares against the PRE-fold original, so a row whose only
-    change is digit folding is still returned (its folded bytes are the
-    contract output); folded rows are candidates by construction."""
+    Detector prefilter first, then one pandas ``str.replace`` (Python re)
+    per rule over the candidate rows only. Rule ORDER is semantic
+    (sequential passes) — do not merge the patterns into one alternation;
+    leftmost-match-wins across rules would diverge from sequential
+    semantics on adjacent matches.
+
+    Digit fold runs first. "Changed" compares against the PRE-fold
+    original, so a row whose only change is digit folding is still
+    returned (its folded bytes are the contract output); a folded row
+    always contains an ASCII digit afterwards, so it is a candidate by
+    construction."""
     out = pd.Series(None, index=texts.index, dtype=object)
     folded = _fold_digits(texts)
     candidates = _candidate_mask(folded)
@@ -282,19 +251,16 @@ def scrub_delta_batch(texts: pd.Series) -> pd.Series:
 
 
 @pandas_udf(T.StringType())
-def scrub_udf(texts: pd.Series) -> pd.Series:
-    # scalar form so it fuses into the same ArrowEvalPython node as the
-    # other scorers (patterns are module-level, warm per worker regardless)
-    return scrub_batch(texts)
-
-
-@pandas_udf(T.StringType())
 def scrub_delta_udf(texts: pd.Series) -> pd.Series:
     return scrub_delta_batch(texts)
 
 
 def scrubbed(text: Column) -> Column:
-    return scrub_udf(text)
+    """The scrubbed text column: changed rows from the delta UDF,
+    every other row passes through unchanged."""
+    from pyspark.sql import functions as F
+
+    return F.coalesce(scrub_delta_udf(text), text)
 
 
 def pii_hit_count(texts: pd.Series) -> pd.Series:

@@ -37,17 +37,11 @@ EN_STOPWORDS = (
 
 
 def words_col(text: Column) -> Column:
-    """Non-empty whitespace-separated tokens (Python ``str.split()``
-    semantics)."""
+    """The tokenization contract as a Column: split on ASCII whitespace
+    runs ``[ \\t\\n\\r]+``, drop empty tokens. Column-API code in
+    ``functions/`` and ``operators/`` tokenizes by calling this. Not Python
+    ``str.split()``, whose whitespace set is Unicode-wide."""
     return F.filter(F.split(text, "[ \\t\\n\\r]+"), lambda w: w != "")
-
-
-def n_chars(text: Column) -> Column:
-    return F.length(text)
-
-
-def n_words(words: Column) -> Column:
-    return F.size(words)
 
 
 #: every ASCII alphanumeric char — translate() deletes these to count them
@@ -104,26 +98,6 @@ def bigram_repetition(words: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def mean_word_length(text: Column, words: Column) -> Column:
-    """Total alpha-ish chars per word ≈ n_chars/n_words; 0.0 for no words."""
-    n = F.size(words)
-    total = F.aggregate(
-        words, F.lit(0), lambda acc, w: acc + F.length(w), lambda acc: acc
-    )
-    return F.when(n > 0, total.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
-def line_dedup_ratio(text: Column) -> Column:
-    """1 − distinct/total over non-empty lines (boilerplate nav menus etc.);
-    0.0 when fewer than 2 lines."""
-    lines = F.filter(F.split(text, "\\n"), lambda l: F.trim(l) != "")
-    total = F.size(lines)
-    distinct = F.size(F.array_distinct(lines))
-    return F.when(
-        total >= 2, F.lit(1.0) - distinct.cast("double") / total.cast("double")
-    ).otherwise(F.lit(0.0))
-
-
 def token_count_bpe_ish(text: Column) -> Column:
     """Cheap token count: alphanumeric runs + each non-whitespace symbol
     counts as one token (a BPE-ish upper bound for training-data
@@ -139,19 +113,6 @@ def doc_fingerprint(text: Column) -> Column:
     lowercased text — the exact-dedup key. JVM-side, no Python."""
     normalized = F.lower(F.regexp_replace(F.trim(text), "[ \\t\\n\\r]+", " "))
     return F.xxhash64(normalized)
-
-
-def bigrams_col(words: Column) -> Column:
-    """Word 2-gram array (NULL when fewer than 2 words)."""
-    n = F.size(words)
-    return F.when(
-        n >= 2,
-        F.zip_with(
-            F.slice(words, 1, n - 1),
-            F.slice(words, 2, n - 1),
-            lambda a, b: F.concat_ws("\x1f", a, b),
-        ),
-    )
 
 
 def with_signals(df, text_col: str = "text", keep_lowered_tokens: bool = False):
@@ -232,7 +193,7 @@ def with_signals(df, text_col: str = "text", keep_lowered_tokens: bool = False):
     )
     n_lines = F.size(F.col("__lines"))
     signals = {
-        "n_chars": n_chars(text),
+        "n_chars": F.length(text),
         "n_words": n,
         "alnum_ratio": alnum_ratio(text),
         "stopword_density": F.when(

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from soda_core_spark.functions.text import words_col
+
 
 def chunk_documents(
     df: DataFrame,
@@ -36,7 +38,7 @@ def chunk_documents(
     if not 0 < stride <= chunk_size:
         raise ValueError("need 0 < stride <= chunk_size")
     t = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(F.split(t, "[ \\t\\n\\r]+"), lambda w: w != "")
+    words = words_col(t)
     base = df.select(F.col(id_col).alias("id"), words.alias("__w"))
     k = F.size(F.col("__w"))
     n_chunks = F.when(k <= 0, F.lit(0)).when(k <= chunk_size, F.lit(1)).otherwise(
@@ -100,10 +102,7 @@ def chain_fragments(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    toks = F.filter(
-        F.split(F.coalesce(F.col(text_col), F.lit("")), "[ \\t\\n\\r]+"),
-        lambda w: w != "",
-    )
+    toks = words_col(F.coalesce(F.col(text_col), F.lit("")))
     base = df.select(F.col(id_col).alias("__id"), toks.alias("__w")).where(
         F.size(F.col("__w")) >= int(k)
     )

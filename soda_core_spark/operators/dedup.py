@@ -30,6 +30,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from soda_core_spark.functions.text import words_col
+
 # ---------------------------------------------------------------------------
 # Exact dedup
 # ---------------------------------------------------------------------------
@@ -167,9 +169,7 @@ def _words_of(text: Column) -> Column:
     """Lowercased non-empty whitespace tokens — the shared tokenization
     of :func:`shingles_col`, exposed so callers can materialize it ONCE
     per row (see :func:`shingle_frame`)."""
-    return F.filter(
-        F.split(F.lower(text), "[ \\t\\n\\r]+"), lambda w: w != ""
-    )
+    return words_col(F.lower(text))
 
 
 def _shingles_of_words(w: Column, n: int) -> Column:
@@ -535,7 +535,7 @@ def simhash_df(
     else:
         th = F.xxhash64
     t = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(F.split(F.lower(t), "[ \\t\\n\\r]+"), lambda w: w != "")
+    words = _words_of(t)
     ex = (
         _spread(df)
         .select(F.col(id_col).alias("id"), F.explode(words).alias("w"))
@@ -1106,7 +1106,7 @@ def trim_spans(
     )
     out = df.join(sp, id_col, "left")
     t = F.coalesce(F.col(text_col), F.lit(""))
-    words = F.filter(F.split(t, "[ \\t\\n\\r]+"), lambda w: w != "")
+    words = words_col(t)
     empty_spans = F.coalesce(
         F.col("__spans"),
         F.array().cast("array<struct<span_start:bigint,span_end:bigint>>"),
@@ -1979,7 +1979,6 @@ def boilerplate_ngrams(
     paragraph-dedup key path."""
     if n < 1:
         raise ValueError(f"n must be >= 1, got {n}")
-    from soda_core_spark.functions.text import words_col
 
     toks = words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     t = F.col("__toks")
@@ -2385,10 +2384,7 @@ def bag_fingerprint_classes(
     """
     from pyspark.sql import Window
 
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[ \\t\\n\\r]+"),
-        lambda x: x != "",
-    )
+    toks = _words_of(F.coalesce(F.col(text_col), F.lit("")))
     fp = F.md5(F.array_join(F.sort_array(toks), " "))
     keyed = df.select(fp.alias("bag_fp"), F.col(id_col).alias("__id")).repartition(
         F.col("bag_fp")

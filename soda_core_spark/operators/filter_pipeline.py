@@ -3,8 +3,10 @@
 One full scan over the input does everything row-level:
 
     signals (built-in F.*, codegen)                 functions/text.py
-    + langid struct (one vectorized pandas UDF)     functions/langid.py
-    + log_ppl (one iterator pandas UDF)             functions/perplexity.py
+    + langid_pred/langid_conf (JVM word-set         functions/langid.py
+      membership over the signals' lowered tokens)
+    + log_ppl (JVM normalization, then a scalar     functions/perplexity.py
+      pandas UDF gathers trigram log-probs)
     + fail_<rule> flags (F.expr per rule)           operators/filter_rules.py
     + keep = AND(NOT fail_i)  (NULL-safe)           operators/compiler.py
     + text_scrubbed for KEPT rows (delta pandas     functions/scrub.py
@@ -43,7 +45,7 @@ from typing import Any, Optional
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from soda_core_spark.functions.langid import langid_udf
+from soda_core_spark.functions.langid import attach_langid_jvm
 from soda_core_spark.functions.perplexity import (
     normalized_for_ppl,
     perplexity_prenorm_udf,
@@ -88,7 +90,7 @@ class QualityFilterPipeline:
         self,
         rules: tuple[FilterRule, ...] = DEFAULT_WEBTEXT_RULES,
         scrub: bool = True,
-        langid: bool | str = True,
+        langid: bool = True,
         perplexity: bool = True,
         text_column: str = "text",
         drop_columns: tuple[str, ...] = ("html",),
@@ -123,12 +125,10 @@ class QualityFilterPipeline:
                 f"scrub must be True/'kept', 'all', or False — got {scrub!r}"
             )
         self.scrub = scrub
-        # langid: "jvm" (default — the function-word model as pure InSet
-        # probes over the token array, bit-identical scores, no Arrow
-        # traffic) | "pandas" (the vectorized-UDF shape a real fastText
-        # binary requires) | False
-        if langid is True:
-            langid = "jvm"
+        # langid: the function-word model as JVM membership probes over
+        # the signals' lowered token array (no Arrow traffic), or off
+        if not isinstance(langid, bool):
+            raise ValueError(f"langid must be True or False — got {langid!r}")
         self.langid = langid
         self.perplexity = perplexity
         self.text_column = text_column
@@ -159,21 +159,16 @@ class QualityFilterPipeline:
             )
         df = df.drop(*[c for c in self.drop_columns if c in df.columns])
         # signals: expensive arrays (words/bigrams) materialized once per
-        # row; the lowered token array is kept when JVM langid follows so
+        # row; the lowered token array is kept when langid follows so
         # language-ID reuses it instead of re-splitting the full text
-        jvm_langid = bool(self.langid) and self.langid != "pandas"
-        out = with_signals(df, self.text_column, keep_lowered_tokens=jvm_langid)
-        if jvm_langid:
-            from soda_core_spark.functions.langid import attach_langid_jvm
-
+        out = with_signals(df, self.text_column, keep_lowered_tokens=self.langid)
+        if self.langid:
             out = attach_langid_jvm(out, self.text_column, lowered_tokens_col="__wl")
         # all scorer UDFs in ONE projection level and one eval type → the
         # ExtractPythonUDFs rule fuses them into a single ArrowEvalPython
         # node (one Arrow round-trip per batch; shared input columns cross
-        # once). JVM langid runs outside the Arrow node entirely.
+        # once). Langid runs outside the Arrow node entirely.
         udf_cols = {}
-        if self.langid == "pandas":
-            udf_cols["_langid"] = langid_udf(text)
         if self.perplexity:
             # normalization runs JVM-side (codegen regexp chain, verified
             # byte-identical to the pandas form); only the trigram-table
@@ -185,21 +180,14 @@ class QualityFilterPipeline:
             # unchanged, so the Arrow batch back to the JVM carries only
             # the few % of rows that actually contain PII/toxicity —
             # coalesce(delta, text) reconstructs the full column
-            # byte-identically. (A JVM input-mask via scrub.can_match_col
-            # was A/B-measured 6 % SLOWER here: two extra Java-regex
-            # passes over full text cost more than the Arrow-in savings
-            # on this corpus. The helper remains for transfer-bound
-            # deployments — much larger documents or remote shuffle.)
+            # byte-identically. (A JVM input-mask that sent NULL for rows
+            # with no digit, '@' or lexicon word was A/B-measured 6 %
+            # SLOWER here: two extra Java-regex passes over full text cost
+            # more than the Arrow-in savings on this corpus; see
+            # BENCH/JOURNAL.md.)
             udf_cols["__scrub_delta"] = scrub_delta_udf(text)
         if udf_cols:
             out = out.withColumns(udf_cols)
-        if self.langid == "pandas":
-            out = out.withColumns(
-                {
-                    "langid_pred": F.col("_langid.langid_pred"),
-                    "langid_conf": F.col("_langid.langid_conf"),
-                }
-            ).drop("_langid")
         fail_flags = {}
         for r in self.rules:
             try:

@@ -46,9 +46,9 @@ from pyspark.sql import functions as F
 from soda_core_spark.functions.text import words_col
 from soda_core_spark.operators.dsir import DEFAULT_BUCKETS, token_bucket
 
-#: separator between bigram halves before hashing — same unit-separator
-#: framing as ``text.bigrams_col`` (no concat ambiguity), replayed by the
-#: oracle as ``chr(31)``.
+#: separator between bigram halves before hashing — the ASCII unit
+#: separator, a control character page text does not carry, so the
+#: concatenation is unambiguous; replayed by the oracle as ``chr(31)``.
 BIGRAM_SEP = "\x1f"
 
 #: Laplace smoothing mass per (bucket, class).

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from soda_core_spark.functions.text import words_col
 from soda_core_spark.operators import prefix
 
 
@@ -307,7 +308,6 @@ def top_vocabulary(
     """The corpus's ``k`` most frequent words (ties by word) — one
     explode + partial-agg groupBy + TakeOrdered; the collect is bounded
     by ``k`` regardless of corpus size."""
-    from soda_core_spark.functions.text import words_col
 
     w = F.explode(words_col(F.coalesce(F.col(text_col), F.lit(""))))
     rows = (
@@ -336,7 +336,6 @@ def with_oov_rate(
     shuffle, zero Python — the language-ID hot-path pattern
     (functions/langid.py). 6 dp rounding pins the integer/integer
     division's cross-engine compare."""
-    from soda_core_spark.functions.text import words_col
 
     ws = words_col(F.coalesce(F.col(text_col), F.lit("")))
     staged = docs.withColumn("__ws", ws)
@@ -480,13 +479,7 @@ def zipf_fit(
     """
     from pyspark.sql import Window
 
-    toks = F.explode(
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    "[ \\t\\n\\r]+"),
-            lambda w: w != "",
-        )
-    ).alias("tok")
+    toks = F.explode(_ws_tokens(text_col)).alias("tok")
     counts = df.select(toks).groupBy("tok").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
@@ -685,13 +678,7 @@ def vocab_divergence(
     (count/total) until the log fold; rounded to 6 dp. Returns one row
     per unordered pair ``(group_a, group_b, n_tokens_a, n_tokens_b,
     jsd)``, ordered by the pair."""
-    toks = F.explode(
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    "[ \\t\\n\\r]+"),
-            lambda w: w != "",
-        )
-    ).alias("tok")
+    toks = F.explode(_ws_tokens(text_col)).alias("tok")
     gt = (
         df.select(F.col(group_col).alias("g"), toks)
         .groupBy("g", "tok")
@@ -777,15 +764,7 @@ def vocabulary_novelty(
     """
     from pyspark.sql import Window
 
-    toks = F.explode(
-        F.filter(
-            F.split(
-                F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                "[ \\t\\n\\r]+",
-            ),
-            lambda w: w != "",
-        )
-    ).alias("tok")
+    toks = F.explode(_ws_tokens(text_col)).alias("tok")
     dt = (
         df.select(F.col(day_col).cast("date").alias("day"), toks)
         .distinct()
@@ -988,12 +967,7 @@ def vocab_stats(
     hapax_count, hapax_ratio)``; ratios rounded 6 dp; groups whose
     documents contain no tokens report zeros (ratio 0.0, not NULL).
     """
-    words = F.explode(
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[ \\t\\n\\r]+"),
-            lambda x: x != "",
-        )
-    ).alias("word")
+    words = F.explode(_ws_tokens(text_col)).alias("word")
     per_word = (
         df.select(F.col(group_col).alias("group"), words)
         .groupBy("group", "word")
@@ -1378,13 +1352,7 @@ def burrows_delta(
     """
     if top_k <= 0:
         raise ValueError(f"top_k must be > 0, got {top_k}")
-    toks = F.explode(
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    "[ \\t\\n\\r]+"),
-            lambda w: w != "",
-        )
-    ).alias("tok")
+    toks = F.explode(_ws_tokens(text_col)).alias("tok")
     gt = (
         df.select(F.col(group_col).alias("g"), toks)
         .groupBy("g", "tok")
@@ -1485,8 +1453,6 @@ def heavy_hitter_tokens(
 
     import numpy as np
     import pandas as pd
-
-    from soda_core_spark.functions.text import words_col
 
     if not (0.0 < phi < 1.0):
         raise ValueError(f"phi must be in (0, 1), got {phi}")
@@ -1601,15 +1567,7 @@ def heaps_law_fit(
     bucket = prefix.hash_bucket(F.md5(F.col(id_col).cast("string")), buckets)
     toks = df.select(
         bucket.alias("__b"),
-        F.explode(
-            F.filter(
-                F.split(
-                    F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    "[ \\t\\n\\r]+",
-                ),
-                lambda w: w != "",
-            )
-        ).alias("__tok"),
+        F.explode(_ws_tokens(text_col)).alias("__tok"),
     )
     n_b = toks.groupBy("__b").agg(F.count(F.lit(1)).alias("__n"))
     v_b = (
@@ -1695,15 +1653,7 @@ def vocabulary_coverage(
     Tokens: lowercased whitespace words (q142/q156 convention)."""
     toks = df.select(
         F.col(group_col).alias("group"),
-        F.explode(
-            F.filter(
-                F.split(
-                    F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    "[ \\t\\n\\r]+",
-                ),
-                lambda w: w != "",
-            )
-        ).alias("word"),
+        F.explode(_ws_tokens(text_col)).alias("word"),
     )
     per_word = toks.groupBy("group", "word").agg(
         F.count(F.lit(1)).alias("freq")
@@ -1987,7 +1937,6 @@ def distinct_ngram_diversity(
     metrics (duplicate_count) lifted from rows to n-gram events."""
     if not ns or any(n < 1 for n in ns):
         raise ValueError(f"ns must be non-empty positive orders, got {ns}")
-    from soda_core_spark.functions.text import words_col
 
     toks = words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
     t = F.col("__toks")
@@ -3208,15 +3157,7 @@ def distinctive_tokens(
 
     toks = df.select(
         F.col(group_col).alias("group"),
-        F.explode(
-            F.filter(
-                F.split(
-                    F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    "[ \\t\\n\\r]+",
-                ),
-                lambda w: w != "",
-            )
-        ).alias("token"),
+        F.explode(_ws_tokens(text_col)).alias("token"),
     )
     grain = toks.groupBy("group", "token").agg(
         F.count(F.lit(1)).cast("long").alias("n_group")
@@ -3506,15 +3447,7 @@ def hapax_share_per_doc(
     explode before the join."""
     toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.filter(
-                F.split(
-                    F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                    "[ \\t\\n\\r]+",
-                ),
-                lambda w: w != "",
-            )
-        ).alias("__tok"),
+        F.explode(_ws_tokens(text_col)).alias("__tok"),
     )
     totals = toks.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_tokens")
@@ -3890,11 +3823,7 @@ def _ws_tokens(text_col: str):
     """Shared whitespace tokenizer (the q135/q136 idiom): lowered,
     split on [ \\t\\n\\r]+, empties dropped — matches the oracle's
     ``list_filter(regexp_split_to_array(lower(...)), w -> w <> '')``."""
-    return F.filter(
-        F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
-                "[ \\t\\n\\r]+"),
-        lambda w: w != "",
-    )
+    return words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
 
 
 def pmi_collocations(
@@ -5506,9 +5435,7 @@ def capitalization_profile(
     projection + one grouped reduce; the token filter is a
     higher-order column function, never Python."""
     t = F.coalesce(F.col(text_col), F.lit(""))
-    toks = F.filter(
-        F.split(t, "[ \\t\\n\\r]+"), lambda w: w != F.lit("")
-    )
+    toks = words_col(t)
     n_allcaps = F.size(
         F.filter(toks, lambda w: w.rlike("^[A-Z]{2,}$"))
     ).cast("long")

@@ -182,8 +182,9 @@ class TestPerplexity:
         import numpy as np
 
         from soda_core_spark.functions.perplexity import (
+            _normalize,
             doc_log_perplexity,
-            score_batch,
+            gather_batch,
         )
         import pandas as pd
 
@@ -192,6 +193,7 @@ class TestPerplexity:
             "completely different words about query engines",
             "a",
         ]
-        vec = score_batch(pd.Series(texts)).to_numpy()
+        normalized = pd.Series([" ".join(_normalize(t).split()) for t in texts])
+        vec = gather_batch(normalized).to_numpy()
         ref = np.array([doc_log_perplexity(t) for t in texts])
         assert np.allclose(vec, ref, atol=1e-9)

@@ -41,19 +41,31 @@ def test_single_arrow_eval_node(web_df):
     assert plan.count("ArrowEvalPython") == 1
 
 
-def test_jvm_langid_outside_arrow_node(web_df):
+def test_jvm_langid_outside_arrow_node(spark, web_df):
     """Default pipeline: language-ID runs as codegen/InSet expressions —
     the single Arrow node carries only perplexity+scrub (2 UDFs), and the
     six per-language fraction columns are materialized once (no
-    re-evaluated token filters in the final projection)."""
+    re-evaluated token filters in the final projection). The registry's
+    language-ID queries (q20, q109) run the same JVM scorer: no Arrow
+    node at all."""
+    from soda_core_spark.entry_queries import REGISTRY
+
     plan = _plan(QualityFilterPipeline().annotate(web_df))
     arrow_lines = [l for l in plan.splitlines() if "ArrowEvalPython" in l]
     assert len(arrow_lines) == 1
     assert "langid" not in arrow_lines[0]
-    # pandas mode keeps langid inside the Arrow node
-    plan_p = _plan(QualityFilterPipeline(langid="pandas").annotate(web_df))
-    arrow_p = [l for l in plan_p.splitlines() if "ArrowEvalPython" in l]
-    assert len(arrow_p) == 1 and "langid" in arrow_p[0]
+    for q in ("q20_langid_scores", "q109_paragraph_langs"):
+        assert "ArrowEvalPython" not in _plan(REGISTRY[q][0](spark, SF)), q
+
+
+def test_langid_accepts_only_bool():
+    """``langid`` is a bool; any other value (a removed mode name, a
+    model name) is rejected when the pipeline is built, before any
+    Spark work."""
+    for bad in ("pandas", "fasttext", "jvm", 1, None):
+        with pytest.raises(ValueError, match="langid"):
+            QualityFilterPipeline(langid=bad)
+    assert QualityFilterPipeline(langid=False).langid is False
 
 
 def test_filter_pushdown_to_parquet(spark):

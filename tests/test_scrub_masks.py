@@ -81,16 +81,18 @@ def test_candidate_mask_re2_equals_re():
 
 
 def test_scrub_output_unchanged_by_mask_engine():
-    """End-to-end: scrub_batch over the adversarial set equals the
-    sequential plain-Python oracle byte-for-byte (the round-5 parity
-    contract, re-pinned across the detection-engine change)."""
-    from soda_core_spark.functions.scrub import scrub_batch, scrub_text
+    """End-to-end: the delta scrub over the adversarial set, with its
+    NULL (unchanged) rows filled from the input, equals the sequential
+    plain-Python oracle byte-for-byte (the round-5 parity contract,
+    re-pinned across the detection-engine change)."""
+    from soda_core_spark.functions.scrub import scrub_delta_batch, scrub_text
 
     s = pd.Series(ADVERSARIAL + [
         "mail a@b.co ssn 123-45-6789 tel +1 (555) 123-4567 "
         "ip 10.0.0.1 card 4111 1111 1111 1111 frakking",
         "١٢٣-٤٥-٦٧٨٩",  # all-unicode SSN
     ])
-    got = scrub_batch(s).tolist()
+    delta = scrub_delta_batch(s)
+    got = delta.where(delta.notna(), s).tolist()
     want = [scrub_text(x) for x in s]
     assert got == want
