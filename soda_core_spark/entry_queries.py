@@ -17,7 +17,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from soda_core_spark.functions.text import EN_STOPWORDS
+from soda_core_spark.functions.text import EN_STOPWORDS, words_col
 from soda_core_spark.operators.dedup import (
     minhash_near_duplicates,
     normalized_text,
@@ -533,7 +533,7 @@ _SW_LIST_SQL = "[" + ",".join(f"'{w}'" for w in EN_STOPWORDS) + "]"
 def q11(spark, sf_dir):
     """Token counting + symbol ratio (text-analysis operators) — built-in
     functions only, mirrored in ANSI-ish SQL."""
-    from soda_core_spark.functions.text import alnum_ratio, words_col
+    from soda_core_spark.functions.text import alnum_ratio
 
     d = _t(spark, sf_dir, "documents")
     t = F.col("text")
@@ -596,7 +596,7 @@ def q13(spark, sf_dir):
 def q14(spark, sf_dir):
     """Stopword density (language/quality scoring) — higher-order filter
     vs DuckDB list lambda."""
-    from soda_core_spark.functions.text import stopword_density, words_col
+    from soda_core_spark.functions.text import stopword_density
 
     d = _t(spark, sf_dir, "documents")
     return d.select(
@@ -621,7 +621,7 @@ def q14(spark, sf_dir):
 )
 def q15(spark, sf_dir):
     """Repetition signal (boilerplate detection)."""
-    from soda_core_spark.functions.text import bigram_repetition, words_col
+    from soda_core_spark.functions.text import bigram_repetition
 
     d = _t(spark, sf_dir, "documents")
     return d.select(
@@ -655,7 +655,7 @@ def q16(spark, sf_dir):
     text fails every rule and is never kept. Left implicit, the two
     engines disagree — Spark's non-ANSI ``size(NULL)`` is -1 (so
     ``< 20`` is TRUE) while DuckDB's ``len(NULL)`` is NULL."""
-    from soda_core_spark.functions.text import alnum_ratio, words_col
+    from soda_core_spark.functions.text import alnum_ratio
 
     d = _t(spark, sf_dir, "documents")
     t = F.col("text")
@@ -947,15 +947,16 @@ def _q20_sql() -> str:
 
 @register("q20_langid_scores", _q20_sql())
 def q20(spark, sf_dir):
-    """Language ID over documents (the pipeline's JVM word-set scorer,
-    ``attach_langid_jvm``) + agreement with the declared lang column. The
-    model (function-word sets) is shared as data with the DuckDB oracle,
-    which re-derives scores/argmax in SQL — exact integer counts, so the
-    cross-engine compare is exact."""
-    from soda_core_spark.functions.langid import attach_langid_jvm
+    """Language ID over documents (the pipeline's scorer,
+    ``attach_langid``: per-language hit counts from the row-signal
+    counter, argmax in the JVM) + agreement with the declared lang
+    column. The model (function-word sets) is shared as data with the
+    DuckDB oracle, which re-derives scores/argmax in SQL — exact integer
+    counts, so the cross-engine compare is exact."""
+    from soda_core_spark.functions.langid import attach_langid
 
     d = _t(spark, sf_dir, "documents")
-    out = attach_langid_jvm(d, "text")
+    out = attach_langid(d, "text")
     return out.select(
         "doc_id",
         "langid_pred",
@@ -1818,7 +1819,7 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source quality/lineage summary over documents: heuristic keep
     flags + dedup + aggregate metrics in one grouped scan — the engine's
     signature shape (quality filter + lineage rollup)."""
-    from soda_core_spark.functions.text import alnum_ratio, words_col
+    from soda_core_spark.functions.text import alnum_ratio
 
     d = _t(spark, sf_dir, "documents")
     t = F.col("text")
@@ -3240,7 +3241,7 @@ def q72(spark, sf_dir):
     like MLlib's treeAggregate), trajectory 12dp-pinned so the DuckDB
     oracle replays training step for step (operators/training.py)."""
     from soda_core_spark.functions.classifier import quality_features
-    from soda_core_spark.functions.text import alnum_ratio, words_col
+    from soda_core_spark.functions.text import alnum_ratio
     from soda_core_spark.operators.training import (
         distill_quality_classifier,
     )
@@ -3322,7 +3323,7 @@ def q73(spark, sf_dir):
     criterion. One corpus pass (bucketed counts), everything after runs
     on a ≤21-row aggregate (operators/calibration.py)."""
     from soda_core_spark.functions.classifier import quality_score
-    from soda_core_spark.functions.text import alnum_ratio, words_col
+    from soda_core_spark.functions.text import alnum_ratio
     from soda_core_spark.operators.calibration import threshold_sweep
 
     d = _t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
@@ -4544,20 +4545,14 @@ def q89(spark, sf_dir):
     ("signal unavailable"), never zero-quality. Shares the LANG_WORDS
     tables with the SQL oracle as data."""
     from soda_core_spark.functions.langid import lang_stopword_density
+    from soda_core_spark.functions.text import text_counts
 
     d = _t(spark, sf_dir, "documents")
-    wl = F.transform(
-        F.filter(
-            F.split(F.coalesce(F.col("text"), F.lit("")), "[ \t\n\r]+"),
-            lambda t: t != "",
-        ),
-        lambda t: F.lower(t),
-    )
-    staged = d.select("doc_id", "lang", wl.alias("__wl"))
+    staged = d.select("doc_id", "lang", text_counts(F.col("text")).alias("__counts"))
     return staged.select(
         "doc_id",
         "lang",
-        lang_stopword_density(F.col("__wl"), F.col("lang")).alias(
+        lang_stopword_density(F.col("__counts"), F.col("lang")).alias(
             "lang_stopword_density"
         ),
     )
@@ -4730,12 +4725,7 @@ def q92(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    n = F.size(
-        F.filter(
-            F.split(F.coalesce(F.col("text"), F.lit("")), "[ \t\n\r]+"),
-            lambda t: t != "",
-        )
-    ).cast("long")
+    n = F.size(words_col(F.coalesce(F.col("text"), F.lit("")))).cast("long")
     staged = d.select("doc_id", n.alias("n_tokens"))
     b = assign_length_buckets(staged, [8, 16, 32, 64])
     return padding_waste_report(b)
@@ -5111,7 +5101,6 @@ def q97(spark, sf_dir):
         alnum_ratio,
         bigram_repetition,
         stopword_density,
-        words_col,
     )
     from soda_core_spark.operators.attribution import rule_attribution
 
@@ -5325,7 +5314,6 @@ def q100(spark, sf_dir):
         alnum_ratio,
         bigram_repetition,
         stopword_density,
-        words_col,
     )
     from soda_core_spark.operators.attribution import rule_pack_diff
 
@@ -5920,7 +5908,7 @@ _Q109_DE = (
 def q109(spark, sf_dir):
     """Paragraph-level language segmentation (functions/langid.py
     paragraph_lang_profile) — the multilingual-page detector: docs gain
-    deterministic French/German paragraphs, per-paragraph JVM langid
+    deterministic French/German paragraphs, per-paragraph langid
     rolls up to dominant language + minority-paragraph fraction. One
     groupBy(doc, lang) with map-side combine, argmax via a unique
     (count, priority) struct key — no window over the corpus."""
@@ -6198,10 +6186,7 @@ def q113(spark, sf_dir):
     from soda_core_spark.operators.attribution import decision_kappa
 
     d = _t(spark, sf_dir, "documents")
-    words = F.filter(
-        F.split(F.coalesce(F.col("text"), F.lit("")), "[ \\t\\n\\r]+"),
-        lambda w: w != "",
-    )
+    words = words_col(F.coalesce(F.col("text"), F.lit("")))
     flags = d.select(
         (F.col("n_chars") >= 400).alias("a"),
         (F.size(words) >= 80).alias("b"),
@@ -6988,7 +6973,6 @@ def q125(spark, sf_dir):
     included), so the rollup can never disagree with the scrub itself;
     the rollup is one fused groupBy over exact integer sums."""
     from soda_core_spark.functions.scrub import pii_count_udf
-    from soda_core_spark.functions.text import words_col
 
     d = _t(spark, sf_dir, "documents")
     base = F.coalesce(F.col("text"), F.lit(""))
@@ -7057,7 +7041,6 @@ def q126(spark, sf_dir):
     cap bounds the driver-side merge loop at any corpus size. This
     oracles the training half of the tokenizer; q85 oracles the apply
     half with a fixed merge table."""
-    from soda_core_spark.functions.text import words_col
 
     d = _t(spark, sf_dir, "documents")
     w = F.explode(
@@ -7272,10 +7255,7 @@ def q130(spark, sf_dir):
     from soda_core_spark.operators.attribution import fleiss_kappa
 
     d = _t(spark, sf_dir, "documents")
-    words = F.filter(
-        F.split(F.coalesce(F.col("text"), F.lit("")), "[ \\t\\n\\r]+"),
-        lambda w: w != "",
-    )
+    words = words_col(F.coalesce(F.col("text"), F.lit("")))
     flags = d.select(
         (F.col("n_chars") >= 400).alias("a"),
         (F.size(words) >= 80).alias("b"),
@@ -7459,12 +7439,7 @@ def q133(spark, sf_dir):
     from soda_core_spark.operators.calibration import classifier_auc
 
     d = _t(spark, sf_dir, "documents")
-    nw = F.size(
-        F.filter(
-            F.split(F.coalesce(F.col("text"), F.lit("")), "[ \\t\\n\\r]+"),
-            lambda w: w != "",
-        )
-    ).cast("double")
+    nw = F.size(words_col(F.coalesce(F.col("text"), F.lit("")))).cast("double")
     return classifier_auc(
         d.select(nw.alias("__nw"), F.col("n_chars")),
         F.round(F.col("__nw") / (F.col("__nw") + F.lit(100.0)), 6),
@@ -7513,12 +7488,7 @@ def q134(spark, sf_dir):
     # lets spearman_correlation skip its isnan guard (which would be
     # pushed into the scan filter and re-evaluate this tokenization
     # per row — the operator casts to double internally anyway)
-    nw = F.size(
-        F.filter(
-            F.split(F.coalesce(F.col("text"), F.lit("")), "[ \\t\\n\\r]+"),
-            lambda w: w != "",
-        )
-    )
+    nw = F.size(words_col(F.coalesce(F.col("text"), F.lit(""))))
     return spearman_correlation(
         d.where(F.col("n_chars").isNotNull()).select(
             F.col("n_chars").alias("x_chars"), nw.alias("y_words")
@@ -8455,12 +8425,7 @@ def q151(spark, sf_dir):
     ).cast("double") / F.greatest(
         F.length(F.coalesce(F.col("text"), F.lit(""))), F.lit(1)
     )
-    toks = F.size(
-        F.filter(
-            F.split(F.coalesce(F.col("text"), F.lit("")), r"[ \t\n\r]+"),
-            lambda x: x != "",
-        )
-    )
+    toks = F.size(words_col(F.coalesce(F.col("text"), F.lit(""))))
     return token_budget_curve(d, score, toks, budget=500_000, precision=3)
 
 
@@ -8686,7 +8651,6 @@ def q155(spark, sf_dir):
         alnum_ratio,
         bigram_repetition,
         stopword_density,
-        words_col,
     )
     from soda_core_spark.operators.attribution import rule_overlap
 
@@ -8995,7 +8959,6 @@ def q160(spark, sf_dir):
         alnum_ratio,
         bigram_repetition,
         stopword_density,
-        words_col,
     )
     from soda_core_spark.operators.attribution import poisson_bootstrap_rates
 
@@ -9390,11 +9353,7 @@ def q166(spark, sf_dir):
     )
 
     d = _t(spark, sf_dir, "documents")
-    toks = F.filter(
-        F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
-                "[ \\t\\n\\r]+"),
-        lambda x: x != "",
-    )
+    toks = words_col(F.lower(F.coalesce(F.col("text"), F.lit(""))))
     labeled = d.select(
         F.md5(normalized_text(F.coalesce(F.col("text"), F.lit(""))))
         .alias("exact_cls"),
@@ -10761,9 +10720,7 @@ def q191(spark, sf_dir):
         {
             "n_chars": F.length(t),
             "n_tokens": token_count_bpe_ish(t),
-            "n_words": F.size(
-                F.filter(F.split(t, "[ \\t\\n\\r]+"), lambda w: w != "")
-            ),
+            "n_words": F.size(words_col(t)),
         },
         split=(prefix32 % 2) == 1,
     )

@@ -6,10 +6,12 @@ tokens found in that language's set; prediction = argmax, confidence = the
 winning score. Deterministic, dependency-free, and shared (as *model data*,
 not inference code) with the plain-pandas oracle.
 
-The Spark implementation is :func:`attach_langid_jvm`: each language's
-score is a JVM membership filter over the lowered token array (codegen,
-no Python, no Arrow traffic). :func:`score_batch` is the plain-pandas
-reference the tests compare it against; it is not a Spark code path.
+The Spark implementation is :func:`langid_columns`: per-language hit
+counts come from the row-signal counter (``text.text_counts``, a pandas
+UDF that maps the distinct lowered tokens of each Arrow batch through
+:data:`_TOKEN_MASK`), and the fractions, confidence and argmax are JVM
+arithmetic over them. :func:`score_batch` is the plain-pandas reference
+the tests compare it against; it is not a Spark code path.
 """
 
 from __future__ import annotations
@@ -18,7 +20,7 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from soda_core_spark.functions.text import EN_STOPWORDS, words_col
+from soda_core_spark.functions.text import EN_STOPWORDS, with_counts
 
 #: frozen per-language function-word sets (model weights, in effect)
 LANG_WORDS: dict[str, frozenset[str]] = {
@@ -58,7 +60,7 @@ LANG_WORDS: dict[str, frozenset[str]] = {
 LANGS: tuple[str, ...] = tuple(sorted(LANG_WORDS))
 
 #: token → language bitmask (bit i = membership in LANGS[i]'s set) — turns
-#: per-language set probes into ONE dict map over the exploded tokens
+#: per-language set probes into ONE dict map per distinct token
 _TOKEN_MASK: dict[str, int] = {}
 for _i, _lang in enumerate(LANGS):
     for _w in LANG_WORDS[_lang]:
@@ -73,7 +75,7 @@ def score_batch(texts: pd.Series) -> pd.DataFrame:
     Tokenization is the repo-wide contract (functions/text.py): split on
     ASCII whitespace runs ``[ \\t\\n\\r]+``, drop empties — NOT
     ``str.split()``, whose unicode-whitespace set (NBSP, \\x0c, …) would
-    silently diverge from the JVM path (:func:`attach_langid_jvm`) and
+    silently diverge from the Spark path (:func:`attach_langid`) and
     the DuckDB oracle on real HTML-derived text."""
     import numpy as np
 
@@ -96,79 +98,53 @@ def score_batch(texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"langid_pred": pred, "langid_conf": conf.astype(float)})
 
 
-def attach_langid_jvm(df, text_col: str = "text", lowered_tokens_col: str | None = None):
-    """Attach ``langid_pred``/``langid_conf`` via the JVM model, staged so
-    every expensive piece is evaluated exactly once per row: the lowered
-    token array and the six per-language fractions are materialized as
-    multi-referenced projection aliases (they survive CollapseProject),
-    then conf = greatest over the fraction COLUMNS and pred compares the
-    columns — without the staging, greatest+argmax would re-run each
-    token-set filter 2-3× (higher-order functions have no CSE).
-
-    ``lowered_tokens_col`` names an ALREADY-materialized lowered token
-    array (e.g. ``with_signals(keep_lowered_tokens=True)``'s ``__wl``) —
-    reusing it skips a second full-text split; the column is consumed
-    (dropped) either way."""
-    if lowered_tokens_col is not None:
-        df = df.withColumnRenamed(lowered_tokens_col, "__wl")
-    else:
-        text = F.coalesce(F.col(text_col), F.lit(""))
-        df = df.withColumn("__wl", words_col(F.lower(text)))
-    fcols = {
-        f"__lid_{lang}": frac
-        for lang, frac in _lang_fractions(F.col("__wl")).items()
-    }
-    df = df.withColumns(fcols)
-    df = df.withColumn(
-        "langid_conf", F.greatest(*[F.col(f"__lid_{lang}") for lang in LANGS])
-    )
-    pred = F.when(F.col("langid_conf") <= 0.0, F.lit("und"))
-    for lang in LANGS:  # first max in sorted-lang order == pandas idxmax
-        pred = pred.when(
-            F.col(f"__lid_{lang}") == F.col("langid_conf"), F.lit(lang)
-        )
-    return df.withColumn("langid_pred", pred).drop("__wl", *fcols)
+def _lang_fraction(counts: Column, lang: str) -> Column:
+    """Fraction of the lowered tokens in ``lang``'s word set; 0.0 for no
+    tokens — one IEEE double over exact integer counts, as in
+    :func:`score_batch`."""
+    n = counts["n_words"]
+    return F.when(
+        n > 0, counts[f"hits_{lang}"].cast("double") / n.cast("double")
+    ).otherwise(F.lit(0.0))
 
 
-def _member_fn(word_set: frozenset[str]):
-    # single-param closure, NOT a default-arg lambda — pyspark treats a
-    # two-param lambda as the (element, index) form (see dedup._salted_hash)
-    words_list = sorted(word_set)
-    return lambda t: t.isin(words_list)
-
-
-def _lang_fractions(lowered_words: Column) -> dict[str, Column]:
-    """Per language, the fraction of the lowered tokens in its word set;
-    0.0 for an empty array. Counts are exact integers and the division
-    is one IEEE double per language, as in :func:`score_batch`."""
-    n = F.size(lowered_words)
-    fracs = {}
+def langid_columns(counts: Column) -> dict[str, Column]:
+    """``langid_conf``/``langid_pred`` as JVM arithmetic over a
+    ``text.text_counts`` struct: conf = the greatest language fraction,
+    pred = the first language (sorted order, as pandas ``idxmax``) that
+    reaches it, ``'und'`` when no token hits any pack."""
+    fracs = {lang: _lang_fraction(counts, lang) for lang in LANGS}
+    conf = F.greatest(*fracs.values())
+    pred = F.when(conf <= 0.0, F.lit("und"))
     for lang in LANGS:
-        hits = F.size(F.filter(lowered_words, _member_fn(LANG_WORDS[lang])))
-        fracs[lang] = F.when(
-            n > 0, hits.cast("double") / n.cast("double")
-        ).otherwise(F.lit(0.0))
-    return fracs
+        pred = pred.when(fracs[lang] == conf, F.lit(lang))
+    return {"langid_conf": conf, "langid_pred": pred}
 
 
-def lang_stopword_density(lowered_words: Column, lang: Column) -> Column:
+def attach_langid(df, text_col: str = "text"):
+    """Attach ``langid_pred``/``langid_conf`` (:func:`langid_columns` over
+    ``text_counts`` of ``text_col``; NULL text counts as ``''``)."""
+    out = with_counts(df, text_col)
+    return out.withColumns(langid_columns(F.col("__counts"))).drop("__counts")
+
+
+def lang_stopword_density(counts: Column, lang: Column) -> Column:
     """Stopword density against the DOCUMENT'S OWN language pack — the
     CCNet/Gopher signal done right for a multilingual corpus (an English
     stopword list scores French prose as junk; each language must be
-    measured against its own function words).
+    measured against its own function words). ``counts`` is a
+    ``text.text_counts`` struct.
 
-    One CASE chain over :data:`LANGS` — only the matching branch
-    evaluates, so cost is one membership filter per row regardless of
-    pack count. Languages with no pack (e.g. zh — whitespace stopword
-    lists don't apply to unsegmented scripts) yield NULL, which the
-    declarative check layer treats as "signal unavailable" rather than
-    zero-quality; token-less documents yield 0.0 like the monolingual
-    form. 6 dp rounding pins the integer/integer division cross-engine.
+    One CASE chain over :data:`LANGS`. Languages with no pack (e.g. zh —
+    whitespace stopword lists don't apply to unsegmented scripts) yield
+    NULL, which the declarative check layer treats as "signal
+    unavailable" rather than zero-quality; token-less documents yield
+    0.0 like the monolingual form. 6 dp rounding pins the
+    integer/integer division cross-engine.
     """
-    fracs = _lang_fractions(lowered_words)
     result = None
     for L in LANGS:
-        d = F.round(fracs[L], 6)
+        d = F.round(_lang_fraction(counts, L), 6)
         result = (
             F.when(lang == L, d) if result is None else result.when(lang == L, d)
         )
@@ -195,8 +171,8 @@ def paragraph_lang_profile(
     included), ``other_fraction`` (6 dp).
 
     Shape for scale: paragraphs explode from the page (linear, no corpus
-    state), prediction is :func:`attach_langid_jvm` over the exploded
-    paragraphs (JVM codegen, zero Python, zero Arrow), and the rollup is
+    state), prediction is :func:`attach_langid` over the exploded
+    paragraphs (one Arrow node for the counts), and the rollup is
     ONE groupBy(doc, lang) with map-side partial aggregation
     followed by a per-doc ``max_by`` over a (count, priority) struct —
     the struct key is unique per language so the argmax is exact, no
@@ -205,7 +181,7 @@ def paragraph_lang_profile(
     text = F.coalesce(F.col(text_col), F.lit(""))
     paras = F.filter(F.split(text, "\\n\\n+"), lambda p: F.trim(p) != "")
     exploded = df.select(F.col(id_col), F.explode(paras).alias("__para"))
-    scored = attach_langid_jvm(exploded, "__para")
+    scored = attach_langid(exploded, "__para")
     counts = (
         scored.select(F.col(id_col), F.col("langid_pred").alias("__plang"))
         .groupBy(id_col, "__plang")

@@ -87,8 +87,8 @@ def gopher_flags(
     flag; higher-order functions run interpreted, so Catalyst does NOT
     common-subexpression-eliminate those repeats. Hot-path callers
     should use :func:`with_gopher_flags`, which materializes the three
-    arrays once per row in their own projection (the same
-    multi-referenced-alias idiom as ``text.with_signals``), or pass
+    arrays once per row in their own projection (multi-referenced
+    non-cheap aliases survive CollapseProject), or pass
     pre-materialized ``words``/``lines``/``lower_words`` here.
     """
     t = F.coalesce(text, F.lit(""))
@@ -194,9 +194,9 @@ def with_gopher_flags(
     """Append the seven Gopher flags + ``keep`` with the word, line,
     and lowered-word arrays materialized ONCE per row in a separate
     projection (multi-referenced non-cheap aliases survive
-    CollapseProject and are evaluated once — the ``with_signals``
-    idiom). This is the hot-path form; the arrays never leave the
-    stage, so the output schema is ``df`` + the eight flag columns."""
+    CollapseProject and are evaluated once). This is the hot-path
+    form; the arrays never leave the stage, so the output schema is
+    ``df`` + the eight flag columns."""
     t = F.coalesce(
         F.col(text) if isinstance(text, str) else text, F.lit("")
     )
@@ -475,7 +475,7 @@ def paragraphs_col(text: Column) -> Column:
     """Non-empty trimmed newline-separated paragraphs. STAGE this with
     ``withColumn`` before feeding :func:`dedup_paragraphs_from` — HOFs
     have no common-subexpression elimination, and the dedup predicate
-    references the array once per element (the with_signals idiom)."""
+    references the array once per element."""
     return F.filter(
         F.transform(
             F.split(F.coalesce(text, F.lit("")), "\n"),

@@ -1,16 +1,27 @@
-"""Text-quality signal columns — pure built-in ``pyspark.sql.functions``.
+"""Text-quality signals — the Gopher/CCNet rule family (doc length, word
+stats, symbol/word ratio, stopword density, repetition) of a
+Common-Crawl-style filter.
 
-These are the heuristic quality signals of a Common-Crawl-style filter
-(doc length, word stats, symbol/word ratio, stopword density, repetition —
-the Gopher/CCNet rule family) expressed as **JVM-side Column expressions**:
-whole-stage codegen, no Python in the hot path. The Spark-side definitions
-are mirrored exactly by the plain-pandas oracle in
+The pipeline's row signals come from ONE vectorized counting pass:
+:func:`text_counts` is a scalar pandas UDF whose body
+(:func:`count_batch`) computes every integer count the signals and
+language ID need per Arrow batch — tokens, token code points, ASCII
+alphanumerics, distinct bigrams, non-empty and distinct lines, and
+per-language stopword hits. It joins the pipeline's perplexity and scrub
+UDFs in one Arrow node, so ``text`` crosses into Python once for all of
+them; :func:`signal_columns` is the cheap JVM arithmetic (the
+``hits/n`` ratios, ``n_chars``, ``doc_fingerprint``) over the counts.
+The Column helpers below (:func:`words_col`, :func:`stopword_density`,
+:func:`bigram_repetition`, :func:`alnum_ratio`, ...) are the registry
+queries' JVM forms over token arrays. The definitions are mirrored
+exactly by the plain-pandas oracle in
 ``soda_core_spark/sources/webtext_oracle.py`` — any change here must be
 made there too (keep/drop parity is the acceptance criterion).
 
-Tokenization contract (both sides): words = text split on ASCII whitespace
-runs, empty tokens dropped. Synthetic data is ASCII-whitespace only, which
-sidesteps the Java-vs-Python ``\\s`` unicode divergence.
+Tokenization contract (all forms): words = text split on ASCII
+whitespace runs ``[ \\t\\n\\r]+``, empty tokens dropped. Synthetic
+data is ASCII-whitespace only, which sidesteps the Java-vs-Python
+``\\s`` unicode divergence.
 
 soda-core analogue: these are the per-column signal expressions its
 ``invalid`` / ``failed_rows`` checks would reference
@@ -20,8 +31,15 @@ same machinery, see operators/compiler.py).
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 #: shared English stopword list (top function words) — also used by the
 #: language-ID model (functions/langid.py) and the oracle. Frozen: order
@@ -81,7 +99,7 @@ def bigram_repetition(words: Column) -> Column:
     higher-order array functions so the whole signal stays in Tungsten;
     distinctness is counted over 64-bit pair hashes (xxhash64 folds both
     tokens with length framing) because array_distinct over bigints takes
-    the hash-set fast path — see :func:`with_signals`."""
+    the hash-set fast path (structs and strings compare pairwise)."""
     n = F.size(words)
     bigrams = F.when(
         n >= 2,
@@ -115,109 +133,202 @@ def doc_fingerprint(text: Column) -> Column:
     return F.xxhash64(normalized)
 
 
-def with_signals(df, text_col: str = "text", keep_lowered_tokens: bool = False):
-    """Attach all signal columns to ``df`` — the profiled fast formulation
-    (micro-benchmarked per expression over 200k docs on local[32]):
+# ---------------------------------------------------------------------------
+# Row-signal counts: one vectorized pass per Arrow batch
+# ---------------------------------------------------------------------------
 
-    * the token array is materialized ONCE per row in its own projection
-      (higher-order lambdas run interpreted; CollapseProject keeps the
-      multi-referenced expensive alias so the split happens once),
-    * char-class counting uses ``translate`` deletion, not regexp_replace
-      (10× faster, value-identical),
-    * bigram distinctness zips token slices into 64-bit pair hashes —
-      array_distinct over bigints takes the hash-set fast path (structs
-      and strings don't), no per-pair allocation,
-    * ``sum(len(w))`` for mean word length = count of non-whitespace chars
-      (tokens partition them) — one translate pass.
+#: ASCII bytes never occur inside a multi-byte UTF-8 sequence, so a byte
+#: table over the UTF-8 buffer classifies ASCII code points exactly
+_ALNUM_BYTE = np.zeros(256, dtype=np.uint8)
+_ALNUM_BYTE[np.frombuffer(_ALNUM_CHARS.encode("ascii"), dtype=np.uint8)] = 1
+#: the tokenization contract's separators other than ' '
+_TNR_BYTE = np.zeros(256, dtype=bool)
+_TNR_BYTE[np.frombuffer(b"\t\n\r", dtype=np.uint8)] = True
 
-    Values are bit-identical to the naive split-token definitions
-    (parity-tested against the plain-Python oracle in
-    tests/test_webtext_parity.py).
 
-    NULL text is treated as empty (matching the oracle's ``text or ''``):
-    otherwise every signal is NULL, no rule can fire, and a null document
-    sails through the filter.
+def _count_fields() -> tuple[str, ...]:
+    from soda_core_spark.functions.langid import LANGS
 
-    ``keep_lowered_tokens=True`` additionally materializes ``__wl`` (the
-    per-token-lowercased array) and leaves it on the frame so a JVM
-    language-ID stage can reuse it instead of re-splitting the full text
-    (lowercasing never introduces whitespace, so ``lower(token)`` equals
-    tokenizing ``lower(text)``); the caller is responsible for dropping
-    ``__wl``. Stopword density always counts against the lowered tokens —
-    value-identical to lowering inline inside the membership filter."""
-    reserved = {"__words", "__wl", "__lines"} & set(df.columns)
-    if reserved:
-        raise ValueError(
-            f"input already has internal column(s) {sorted(reserved)} — "
-            "with_signals would silently clobber and drop them; rename "
-            "them first"
-        )
-    text = F.coalesce(F.col(text_col), F.lit(""))
-    w = F.col("__words")
-    out = df.withColumn("__words", words_col(text))
-    out = out.withColumn(
-        "__wl", F.transform(w, lambda t: F.lower(t))
+    return (
+        "n_words",  # tokens under the tokenization contract
+        "n_nonws",  # code points inside tokens (sum of token lengths)
+        "n_alnum",  # [A-Za-z0-9] code points
+        "n_bigrams",  # distinct adjacent token pairs
+        "n_lines",  # '\n'-split lines non-empty after a space trim
+        "n_lines_distinct",  # distinct such lines (untrimmed values)
+    ) + tuple(f"hits_{lang}" for lang in LANGS)  # lowered tokens in a pack
+
+
+def _per_doc_distinct(doc: np.ndarray, codes: np.ndarray, n: int) -> np.ndarray:
+    """Distinct ``codes`` per document: one 1-D int64 key per (doc, code)
+    — codes are < their own count, so ``doc * count + code`` is exact."""
+    k = int(codes.max()) + 1 if len(codes) else 1
+    u = pd.unique(doc * k + codes)
+    return np.bincount(u // k, minlength=n)
+
+
+def count_batch(texts: pd.Series) -> pd.DataFrame:
+    """Every integer count the row signals and language ID are built
+    from, for one batch of documents (NULL text counts as ``''``).
+
+    * tokens — ``\\t``/``\\n``/``\\r`` become ``' '`` in a copy of the
+      UTF-8 buffer, then one split on ``' '`` with empties dropped: equal
+      to :func:`words_col`'s split on ``[ \\t\\n\\r]+``;
+    * language hits — the DISTINCT tokens are lowercased with Python
+      ``str.lower`` (full case mapping like the JVM's ``lower``: ``İ`` →
+      ``i̇``, Kelvin sign → ``k``, final ``Σ`` → ``ς``; Arrow's
+      ``utf8_lower`` maps ``İ`` → ``i``) and mapped through the
+      language bitmask;
+    * lines — ``'\\n'``-split, kept when non-empty after a trim of
+      spaces only (Spark ``trim``), distinct over the untrimmed values;
+    * bigrams — distinct adjacent token pairs, counted exactly over
+      dictionary codes.
+    """
+    from soda_core_spark.functions.langid import LANGS, _TOKEN_MASK
+
+    n = len(texts)
+    arr = pc.fill_null(pa.array(texts, type=pa.string(), from_pandas=True), "")
+    offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
+        arr.offset : arr.offset + n + 1
+    ]
+    data = arr.buffers()[2]
+    body = (
+        np.frombuffer(data, dtype=np.uint8)[offsets[0] : offsets[-1]]
+        if data is not None
+        else np.zeros(0, dtype=np.uint8)
     )
-    wl = F.col("__wl")
-    n = F.size(w)
-    # distinct-bigram count via 64-bit PAIR HASHES, not pair values:
-    # array_distinct over array<struct<string,string>> misses the hash-set
-    # fast path (pairwise struct comparisons — measured 9.4s of a 16.4s
-    # signal stage at 1.6M docs); xxhash64(a, b) folds both tokens with
-    # length framing (no concat-ambiguity), and array_distinct over
-    # array<bigint> is the fast path — 3.4× faster, value-identical on
-    # the full 1.6M-doc corpus (sum of distinct counts equal; a 64-bit
-    # collision shifts one doc's ratio by 1/(n-1) with probability
-    # ~k²/2^65 per doc — immaterial at any corpus size)
-    bigram_hashes = F.zip_with(
-        F.slice(w, 1, n - 1), F.slice(w, 2, n - 1), lambda a, b: F.xxhash64(a, b)
+    rel = offsets - offsets[0]
+
+    # int32 suffices: an Arrow string batch holds < 2**31 bytes
+    csum = np.zeros(len(body) + 1, dtype=np.int32)
+    np.cumsum(_ALNUM_BYTE[body], dtype=np.int32, out=csum[1:])
+    n_alnum = csum[rel[1:]] - csum[rel[:-1]]
+
+    spaced = body.copy()
+    spaced[_TNR_BYTE[body]] = 32
+    parts = pc.split_pattern(
+        pa.StringArray.from_buffers(n, pa.py_buffer(rel), pa.py_buffer(spaced)),
+        " ",
     )
-    non_ws_chars = F.length(F.translate(text, " \t\n\r", ""))
-    sw_hits = F.size(F.filter(wl, lambda t: t.isin(EN_STOPWORDS)))
-    # non-empty lines materialized ONCE and as 64-bit xxhash64 values, not
-    # line strings: line_dedup references the array 3× (total size,
-    # distinct size, the ≥2 guard) and HOFs have no CSE, so the alias keeps
-    # the split+filter to one pass per row; hashing inside the same
-    # transform gives array_distinct over array<bigint> the hash-set fast
-    # path (the same fix the bigram counter took — array_distinct over
-    # strings does pairwise comparisons) and keeps full line STRINGS out of
-    # the row entirely. Distinct-hash count equals distinct-line count
-    # modulo 64-bit collisions (~k²/2^65 per doc — immaterial); A/B'd
-    # value-identical over the 1.6M-doc corpus, see BENCH/JOURNAL.md r4.
-    out = out.withColumn(
-        "__lines",
-        F.transform(
-            F.filter(F.split(text, "\\n"), lambda l: F.trim(l) != ""),
-            lambda l: F.xxhash64(l),
+    flat = parts.flatten()
+    nonempty = pc.greater(pc.binary_length(flat), 0)
+    tokens = flat.filter(nonempty)
+    doc = pc.list_parent_indices(parts).filter(nonempty).to_numpy()
+    n_nonws = np.bincount(
+        doc, weights=pc.utf8_length(tokens).to_numpy(), minlength=n
+    ).astype(np.int64)
+
+    enc = tokens.dictionary_encode()
+    codes = enc.indices.to_numpy().astype(np.int64)
+    vocab_mask = np.fromiter(
+        (_TOKEN_MASK.get(w.lower(), 0) for w in enc.dictionary.to_pylist()),
+        dtype=np.int64,
+        count=len(enc.dictionary),
+    )
+    masks = vocab_mask[codes]
+    hit = masks != 0
+    hit_doc, hit_mask = doc[hit], masks[hit]
+
+    same_doc = doc[1:] == doc[:-1]
+    pair_key = codes[:-1][same_doc] * len(enc.dictionary) + codes[1:][same_doc]
+    pair_codes = pd.factorize(pair_key)[0].astype(np.int64)
+
+    lines = pc.split_pattern(arr, "\n")
+    lflat = lines.flatten()
+    filled = pc.greater(pc.binary_length(pc.utf8_trim(lflat, characters=" ")), 0)
+    line_doc = pc.list_parent_indices(lines).filter(filled).to_numpy()
+    line_codes = lflat.filter(filled).dictionary_encode().indices.to_numpy()
+
+    counts = {
+        "n_words": np.bincount(doc, minlength=n),
+        "n_nonws": n_nonws,
+        "n_alnum": n_alnum,
+        "n_bigrams": _per_doc_distinct(doc[1:][same_doc], pair_codes, n),
+        "n_lines": np.bincount(line_doc, minlength=n),
+        "n_lines_distinct": _per_doc_distinct(
+            line_doc, line_codes.astype(np.int64), n
         ),
+    }
+    for i, lang in enumerate(LANGS):
+        counts[f"hits_{lang}"] = np.bincount(
+            hit_doc[(hit_mask >> i) & 1 == 1], minlength=n
+        )
+    return pd.DataFrame(
+        {f: counts[f].astype(np.int32) for f in _count_fields()},
+        index=texts.index,
     )
-    n_lines = F.size(F.col("__lines"))
-    signals = {
-        "n_chars": F.length(text),
+
+
+@functools.cache
+def _counts_udf():
+    schema = ", ".join(f"{f}: int" for f in _count_fields())
+    return pandas_udf(count_batch, f"struct<{schema}>")
+
+
+def text_counts(text: Column) -> Column:
+    """The :func:`count_batch` struct for ``text`` — a scalar pandas UDF.
+    In one projection with the pipeline's other scorer UDFs it joins
+    their single Arrow node, and ``text`` crosses once for all of them;
+    the signals and language ID are cheap JVM arithmetic over its
+    fields (:func:`signal_columns`, ``langid.langid_columns``)."""
+    return _counts_udf()(text)
+
+
+def _ratio(num: Column, den: Column) -> Column:
+    return num.cast("double") / den.cast("double")
+
+
+def signal_columns(counts: Column, text: Column) -> dict[str, Column]:
+    """The row signals as JVM arithmetic over a :func:`text_counts`
+    struct of ``text``: the same integer-over-integer doubles the oracle
+    computes. NULL text counts as ``''``."""
+    text = F.coalesce(text, F.lit(""))
+    n = counts["n_words"]
+    n_chars = F.length(text)
+    n_lines = counts["n_lines"]
+    zero = F.lit(0.0)
+    return {
+        "n_chars": n_chars,
         "n_words": n,
-        "alnum_ratio": alnum_ratio(text),
-        "stopword_density": F.when(
-            n > 0, sw_hits.cast("double") / n.cast("double")
-        ).otherwise(F.lit(0.0)),
+        "alnum_ratio": F.when(
+            n_chars > 0, _ratio(counts["n_alnum"], n_chars)
+        ).otherwise(zero),
+        "stopword_density": F.when(n > 0, _ratio(counts["hits_en"], n)).otherwise(
+            zero
+        ),
         "bigram_repetition": F.when(
-            n >= 2,
-            F.lit(1.0)
-            - F.size(F.array_distinct(bigram_hashes)).cast("double")
-            / (n - 1).cast("double"),
-        ).otherwise(F.lit(0.0)),
-        "mean_word_length": F.when(
-            n > 0, non_ws_chars.cast("double") / n.cast("double")
-        ).otherwise(F.lit(0.0)),
+            n >= 2, F.lit(1.0) - _ratio(counts["n_bigrams"], n - 1)
+        ).otherwise(zero),
+        "mean_word_length": F.when(n > 0, _ratio(counts["n_nonws"], n)).otherwise(
+            zero
+        ),
         "line_dedup_ratio": F.when(
-            n_lines >= 2,
-            F.lit(1.0)
-            - F.size(F.array_distinct(F.col("__lines"))).cast("double")
-            / n_lines.cast("double"),
-        ).otherwise(F.lit(0.0)),
+            n_lines >= 2, F.lit(1.0) - _ratio(counts["n_lines_distinct"], n_lines)
+        ).otherwise(zero),
         "doc_fingerprint": doc_fingerprint(text),
     }
-    out = out.withColumns(signals).drop("__words", "__lines")
-    return out if keep_lowered_tokens else out.drop("__wl")
+
+
+def with_counts(df, text_col: str = "text"):
+    """``df`` plus the internal ``__counts`` column (:func:`text_counts`
+    of ``text_col``), for callers that derive columns from it and then
+    drop it."""
+    if "__counts" in df.columns:
+        raise ValueError(
+            "input already has internal column '__counts' — it would be "
+            "silently clobbered and dropped; rename it first"
+        )
+    return df.withColumn("__counts", text_counts(F.col(text_col)))
+
+
+def with_signals(df, text_col: str = "text"):
+    """Attach the row-signal columns to ``df`` (:func:`signal_columns`
+    over :func:`text_counts`). NULL text is treated as empty (the
+    oracle's ``text or ''``): otherwise every signal is NULL, no rule can
+    fire, and a null document sails through the filter. Values equal the
+    plain-Python oracle's (tests/test_webtext_parity.py)."""
+    signals = signal_columns(F.col("__counts"), F.col(text_col))
+    return with_counts(df, text_col).withColumns(signals).drop("__counts")
 
 
 def top_ngram_char_fractions(

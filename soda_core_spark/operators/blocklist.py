@@ -58,8 +58,8 @@ def blocklist_filter(
         from soda_core_spark.functions.text import words_col
 
         terms = sorted({t.lower() for t in blocked_terms})
-        # THE engine tokenization contract — shared with with_signals and
-        # BM25, so the token-exact guarantee can't drift
+        # THE engine tokenization contract — shared with the row-signal
+        # counter and BM25, so the token-exact guarantee can't drift
         words = words_col(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
         reasons.append(
             F.when(F.exists(words, lambda w: w.isin(terms)), F.lit("term"))
@@ -131,7 +131,7 @@ def lexicon_score(
     score replaces the all-or-nothing term trip.
 
     Matching is token-exact on the engine tokenization contract
-    (lowercased whitespace tokens — shared with with_signals/BM25/
+    (lowercased whitespace tokens — shared with the row signals/BM25/
     blocklist_filter, so the no-substring-firing guarantee can't drift).
     Adds ``lex_hits`` (count of tokens PRESENT in the lexicon,
     multiplicity included, regardless of weight sign — zero- and

@@ -43,6 +43,10 @@ from soda_core_spark.plans.results import (
 )
 
 
+def _cause(e: Exception) -> str:
+    return f"{type(e).__name__}: {e}"
+
+
 class DuplicateCheckIdentityError(Exception):
     """Two checks resolved to the same identity — a contract error in the
     reference too (base.py:1263-1282)."""
@@ -193,6 +197,9 @@ def _verify_contract_body(
     # to per-metric jobs. A metric with no value leaves its checks
     # NOT_EVALUATED via None-propagation.
     values: dict[str, Any] = {}
+    #: metric/side-query key → cause of its failure; carried into the
+    #: measurement and into the message of every check left NOT_EVALUATED
+    errors: dict[str, str] = {}
     measurements: list[Measurement] = []
     built: list[AggMetric] = []
     built_cols = []
@@ -200,8 +207,9 @@ def _verify_contract_body(
     for m in agg_metrics.values():
         try:
             candidates.append((m, m.build()))
-        except Exception:
-            measurements.append(Measurement(m.key, None, m.name))
+        except Exception as e:
+            errors[m.key] = _cause(e)
+            measurements.append(Measurement(m.key, None, m.name, errors[m.key]))
     # analysis cost: ONE batched analyze when every expression is valid
     # (the overwhelmingly common case — O(1) driver roundtrips however
     # many metrics a contract has); only a failing batch falls back to
@@ -219,8 +227,11 @@ def _verify_contract_body(
                     filtered.select(col.alias("__soda_validate"))
                     built.append(m)
                     built_cols.append(col)
-                except Exception:
-                    measurements.append(Measurement(m.key, None, m.name))
+                except Exception as e:
+                    errors[m.key] = _cause(e)
+                    measurements.append(
+                        Measurement(m.key, None, m.name, errors[m.key])
+                    )
     if built:
         exprs = [c.alias(f"m_{i}") for i, c in enumerate(built_cols)]
         try:
@@ -228,28 +239,30 @@ def _verify_contract_body(
             rows = [row[i] for i in range(len(built))]
         except Exception:
             rows = []
-            for c in built_cols:
+            for m, c in zip(built, built_cols):
                 try:
                     rows.append(filtered.agg(c.alias("m_0")).collect()[0][0])
-                except Exception:
+                except Exception as e:
+                    errors[m.key] = _cause(e)
                     rows.append(None)
         for m, v in zip(built, rows):
-            if v is None and m.coerce_zero:
+            if v is None and m.coerce_zero and m.key not in errors:
                 v = 0  # SUM(CASE WHEN ...) is NULL over zero rows (ref missing_check.py:137-140)
             values[m.key] = v
-            measurements.append(Measurement(m.key, v, m.name))
+            measurements.append(Measurement(m.key, v, m.name, errors.get(m.key)))
 
     for sq in side_queries.values():
         try:
             v = sq.run(ctx)
         except Exception as e:
             v = None  # dependent checks → NOT_EVALUATED
+            errors[sq.key] = _cause(e)
             # error marker lets evaluators tell "query errored" apart from
             # "query legitimately returned NULL" (reference treats a NULL
             # rows_tested denominator as valid, failed_rows_check.py:133-140)
-            values[SIDE_QUERY_ERROR_PREFIX + sq.key] = f"{type(e).__name__}: {e}"
+            values[SIDE_QUERY_ERROR_PREFIX + sq.key] = errors[sq.key]
         values[sq.key] = v
-        measurements.append(Measurement(sq.key, v, sq.name))
+        measurements.append(Measurement(sq.key, v, sq.name, errors.get(sq.key)))
 
     # --- evaluate -----------------------------------------------------------
     results: list[CheckResult] = []
@@ -275,7 +288,16 @@ def _verify_contract_body(
             )
             continue
         try:
-            results.append(plan.evaluate(values, ctx))
+            result = plan.evaluate(values, ctx)
+            causes = [
+                f"metric {k!r} failed: {errors[k]}"
+                for k in [m.key for m in plan.metrics]
+                + [sq.key for sq in plan.side_queries]
+                if k in errors
+            ]
+            if causes and result.outcome == CheckOutcome.NOT_EVALUATED:
+                result.message = "; ".join(filter(None, [result.message, *causes]))
+            results.append(result)
         except Exception as e:
             results.append(
                 CheckResult(

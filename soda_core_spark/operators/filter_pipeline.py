@@ -2,17 +2,22 @@
 
 One full scan over the input does everything row-level:
 
-    signals (built-in F.*, codegen)                 functions/text.py
-    + langid_pred/langid_conf (JVM word-set         functions/langid.py
-      membership over the signals' lowered tokens)
-    + log_ppl (JVM normalization, then a scalar     functions/perplexity.py
-      pandas UDF gathers trigram log-probs)
+    one Arrow node, text crossing once:
+      __counts (ONE vectorized counting pass:      functions/text.py
+        tokens, token chars, alnum, distinct
+        bigrams/lines, per-language hits)
+      log_ppl (JVM normalization feeds a scalar    functions/perplexity.py
+        pandas UDF that gathers trigram log-probs)
+      __scrub_delta (delta pandas UDF: only        functions/scrub.py
+        CHANGED rows' bytes cross back)
+    + signals (JVM arithmetic over __counts:       functions/text.py
+      hits/n ratios, n_chars, doc_fingerprint)
+    + langid_pred/langid_conf (JVM argmax over     functions/langid.py
+      the per-language hit fractions)
     + fail_<rule> flags (F.expr per rule)           operators/filter_rules.py
     + keep = AND(NOT fail_i)  (NULL-safe)           operators/compiler.py
-    + text_scrubbed for KEPT rows (delta pandas     functions/scrub.py
-      UDF: only CHANGED rows' bytes cross Arrow;
-      coalesce(delta, text) reconstructs, keep
-      masks the output — dropped rows are NULL)
+    + text_scrubbed for KEPT rows (coalesce(delta, text), keep masks the
+      output — dropped rows are NULL)
     → observe(global metrics)  — zero-cost aggregates attached to the write
     → write annotated output partitioned by keep    (kept corpus = keep=true/)
 
@@ -22,7 +27,7 @@ this is the scale-correct alternative to persisting a 100 TB intermediate.
 
 Scale design notes (SURVEY §7):
 * the whole row-level stage is shuffle-free — it pipelines scan → codegen
-  exprs → Arrow UDFs → write within each task,
+  exprs → one Arrow node → codegen exprs → write within each task,
 * ``html`` is never referenced, so Catalyst prunes it at the parquet/Iceberg
   scan (check ``.explain`` ReadSchema),
 * ``salt=True`` inserts ``repartition(n, xxhash64(url))`` for inputs whose
@@ -45,13 +50,13 @@ from typing import Any, Optional
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from soda_core_spark.functions.langid import attach_langid_jvm
+from soda_core_spark.functions.langid import langid_columns
 from soda_core_spark.functions.perplexity import (
     normalized_for_ppl,
     perplexity_prenorm_udf,
 )
 from soda_core_spark.functions.scrub import scrub_delta_udf
-from soda_core_spark.functions.text import with_signals
+from soda_core_spark.functions.text import signal_columns, text_counts
 from soda_core_spark.operators.compiler import keep_predicate
 from soda_core_spark.operators.filter_rules import (
     DEFAULT_WEBTEXT_RULES,
@@ -125,8 +130,8 @@ class QualityFilterPipeline:
                 f"scrub must be True/'kept', 'all', or False — got {scrub!r}"
             )
         self.scrub = scrub
-        # langid: the function-word model as JVM membership probes over
-        # the signals' lowered token array (no Arrow traffic), or off
+        # langid: the function-word model's argmax over the counter's
+        # per-language hits, or off
         if not isinstance(langid, bool):
             raise ValueError(f"langid must be True or False — got {langid!r}")
         self.langid = langid
@@ -158,23 +163,25 @@ class QualityFilterPipeline:
                 ),
             )
         df = df.drop(*[c for c in self.drop_columns if c in df.columns])
-        # signals: expensive arrays (words/bigrams) materialized once per
-        # row; the lowered token array is kept when langid follows so
-        # language-ID reuses it instead of re-splitting the full text
-        out = with_signals(df, self.text_column, keep_lowered_tokens=self.langid)
-        if self.langid:
-            out = attach_langid_jvm(out, self.text_column, lowered_tokens_col="__wl")
+        reserved = {"__counts", "__log_ppl", "__scrub_delta"} & set(df.columns)
+        if reserved:
+            raise ValueError(
+                f"input already has internal column(s) {sorted(reserved)} — "
+                "annotate would silently clobber and drop them; rename them "
+                "first"
+            )
         # all scorer UDFs in ONE projection level and one eval type → the
         # ExtractPythonUDFs rule fuses them into a single ArrowEvalPython
-        # node (one Arrow round-trip per batch; shared input columns cross
-        # once). Langid runs outside the Arrow node entirely.
-        udf_cols = {}
+        # node (one Arrow round-trip per batch; text crosses once for the
+        # counter and the scrub). Their outputs take internal names so the
+        # public columns below keep the output column order.
+        udf_cols = {"__counts": text_counts(text)}
         if self.perplexity:
             # normalization runs JVM-side (codegen regexp chain, verified
             # byte-identical to the pandas form); only the trigram-table
             # gather crosses into Python — ~70 % of the UDF's CPU moves
             # out of the Arrow node
-            udf_cols["log_ppl"] = perplexity_prenorm_udf(normalized_for_ppl(text))
+            udf_cols["__log_ppl"] = perplexity_prenorm_udf(normalized_for_ppl(text))
         if self.scrub:
             # delta form: the UDF returns NULL for rows the scrub leaves
             # unchanged, so the Arrow batch back to the JVM carries only
@@ -186,19 +193,30 @@ class QualityFilterPipeline:
             # more than the Arrow-in savings on this corpus; see
             # BENCH/JOURNAL.md.)
             udf_cols["__scrub_delta"] = scrub_delta_udf(text)
-        if udf_cols:
-            out = out.withColumns(udf_cols)
-        fail_flags = {}
-        for r in self.rules:
-            try:
-                cond = F.expr(r.condition)
-                out.select(cond)  # eager analysis against the real schema
-            except Exception as e:
-                raise InvalidFilterRuleError(
-                    f"rule '{r.name}': condition {r.condition!r} is invalid "
-                    f"against columns {out.columns}: {e}"
-                ) from None
-            fail_flags[f"fail_{r.name}"] = cond
+        out = df.withColumns(udf_cols)
+        # signals and language ID: cheap JVM arithmetic over the counts
+        counts = F.col("__counts")
+        model_cols = signal_columns(counts, text)
+        if self.langid:
+            model_cols.update(langid_columns(counts))
+        if self.perplexity:
+            model_cols["log_ppl"] = F.col("__log_ppl")
+        out = out.withColumns(model_cols)
+        # rule conditions analysed in ONE batch against the real schema;
+        # only a failing batch re-analyses rule by rule to name the bad one
+        try:
+            fail_flags = {f"fail_{r.name}": F.expr(r.condition) for r in self.rules}
+            out.select(*fail_flags.values())
+        except Exception:
+            for r in self.rules:
+                try:
+                    out.select(F.expr(r.condition))
+                except Exception as e:
+                    raise InvalidFilterRuleError(
+                        f"rule '{r.name}': condition {r.condition!r} is invalid "
+                        f"against columns {out.columns}: {e}"
+                    ) from None
+            raise
         out = out.withColumns(fail_flags)
         out = out.withColumn(
             "keep", keep_predicate([F.col(f"fail_{r.name}") for r in self.rules])
@@ -210,9 +228,9 @@ class QualityFilterPipeline:
                 # NULL it JVM-side (the regex already ran in the fused
                 # node; this masks the OUTPUT, costing nothing)
                 scrubbed = F.when(F.col("keep"), scrubbed)
-            out = out.withColumn("text_scrubbed", scrubbed).drop("__scrub_delta")
+            out = out.withColumn("text_scrubbed", scrubbed)
         out = out.withColumn(LINEAGE_KEY, host_col())
-        return out
+        return out.drop(*udf_cols)
 
     # -- metrics -------------------------------------------------------------
 

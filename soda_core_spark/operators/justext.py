@@ -193,7 +193,7 @@ def with_justext_blocks(
     """Attach ``__blocks`` / ``__cf`` / ``__final`` arrays (block texts,
     context-free classes, revised classes; empty blocks dropped, order
     preserved). Staged projections: each array is materialized once per
-    row (the with_signals idiom) — downstream callers explode or join
+    row (multi-referenced aliases) — downstream callers explode or join
     them without recompute."""
     reserved = {"__frags", "__blocks", "__alens", "__cf", "__final"} & set(
         df.columns

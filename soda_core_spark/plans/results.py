@@ -42,11 +42,14 @@ def consistent_hash(*parts: Any) -> str:
 @dataclass(frozen=True)
 class Measurement:
     """(metric_id, value, metric_name) — one scalar per metric per scan
-    (reference contract_verification.py:532-536)."""
+    (reference contract_verification.py:532-536). ``error`` is the cause
+    (``"<ExceptionType>: <message>"``) when the metric failed to build,
+    analyse or run; ``value`` is then None."""
 
     metric_id: str
     value: Any
     metric_name: str
+    error: Optional[str] = None
 
 
 @dataclass

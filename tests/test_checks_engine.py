@@ -491,3 +491,50 @@ def test_session_verifies_multiple_contracts_with_isolation(spark):
         spark, contracts[:2], datasets={"ds_a": a, "ds_b": b}
     )
     assert healthy.is_passed()
+
+
+def test_failed_metric_keeps_its_cause(spark, missing_df):
+    """Fault injection: a check ``filter`` over a missing column fails to
+    analyse. The check lands NOT_EVALUATED with the cause in its message,
+    the measurement carries the same cause, and a sibling check still
+    evaluates."""
+    contract = contract_from_dict(
+        {
+            "dataset": "t",
+            "checks": [{"row_count": {"filter": "no_such_col > 0", "must_be": 2}}],
+            "columns": [{"name": "id", "checks": ["missing"]}],
+        }
+    )
+    result = verify_contract(spark, contract, missing_df)
+    bad, sibling = result.check_results
+    assert bad.outcome == CheckOutcome.NOT_EVALUATED
+    assert "AnalysisException" in bad.message and "no_such_col" in bad.message
+    (failed,) = [m for m in result.measurements if m.error is not None]
+    assert failed.value is None
+    assert failed.error.startswith("AnalysisException: ")
+    assert failed.error in bad.message
+    assert sibling.outcome == CheckOutcome.FAILED
+    assert all(m.error is None for m in result.measurements if m is not failed)
+
+
+def test_runtime_metric_failure_is_not_a_zero_count(spark):
+    """Fault injection: an ANSI cast fails at RUNTIME inside the fused
+    aggregation. The failed count must not be coerced to 0 (a silent
+    PASS): the check lands NOT_EVALUATED with the cause, and the row
+    count, computed by its own per-metric job, still evaluates."""
+    df = spark.createDataFrame([("1",), ("x",), ("3",)], ["v"])
+    contract = contract_from_dict(
+        {
+            "dataset": "t",
+            "checks": [
+                {"failed_rows": {"condition": "cast(v as int) > 100", "must_be": 0}},
+                "row_count",
+            ],
+        }
+    )
+    result = verify_contract(spark, contract, df)
+    bad, rows = result.check_results
+    assert bad.outcome == CheckOutcome.NOT_EVALUATED
+    assert bad.metric_value is None
+    assert "CAST_INVALID_INPUT" in bad.message
+    assert rows.outcome == CheckOutcome.PASSED and rows.metric_value == 3

@@ -606,10 +606,11 @@ def test_simhash_near_duplicates_hamming_zero_64bit(spark):
 
 def test_langid_tokenizer_contract_odd_whitespace(spark):
     """NBSP / form feed are NOT separators under the repo's ASCII-ws
-    tokenization contract — pandas, JVM, and argmax must all agree."""
+    tokenization contract — the pandas reference and the Spark scorer
+    must agree."""
     import pandas as pd
 
-    from soda_core_spark.functions.langid import attach_langid_jvm, score_batch
+    from soda_core_spark.functions.langid import attach_langid, score_batch
 
     texts = [
         "the\u00a0of and to in a is that it was",   # NBSP glues two tokens
@@ -618,13 +619,13 @@ def test_langid_tokenizer_contract_odd_whitespace(spark):
     ]
     pdf = score_batch(pd.Series(texts))
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["i", "text"])
-    jvm = {r["i"]: (r["langid_pred"], r["langid_conf"])
-           for r in attach_langid_jvm(df).select("i", "langid_pred", "langid_conf").collect()}
+    got = {r["i"]: (r["langid_pred"], r["langid_conf"])
+           for r in attach_langid(df).select("i", "langid_pred", "langid_conf").collect()}
     for i in range(3):
-        assert jvm[i] == (pdf["langid_pred"][i], pdf["langid_conf"][i]), i
+        assert got[i] == (pdf["langid_pred"][i], pdf["langid_conf"][i]), i
     # the glued token is a miss in both engines: 8 hits / 9 tokens
-    assert jvm[0][1] == pytest.approx(8 / 9)
-    assert jvm[2] == ("en", 1.0)
+    assert got[0][1] == pytest.approx(8 / 9)
+    assert got[2] == ("en", 1.0)
 
 
 def test_multimodal_real_decoders(spark):

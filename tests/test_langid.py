@@ -4,6 +4,7 @@ def test_lang_stopword_density_uses_own_pack(spark):
     from pyspark.sql import functions as F
 
     from soda_core_spark.functions.langid import lang_stopword_density
+    from soda_core_spark.functions.text import text_counts
 
     rows = [
         (1, "the cat sat on the mat", "en"),       # 3/6 en stopwords
@@ -13,15 +14,8 @@ def test_lang_stopword_density_uses_own_pack(spark):
         (5, "", "en"),                              # empty -> 0.0
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text", "lang"])
-    wl = F.transform(
-        F.filter(
-            F.split(F.coalesce(F.col("text"), F.lit("")), "[ \t\n\r]+"),
-            lambda t: t != "",
-        ),
-        lambda t: F.lower(t),
-    )
-    staged = df.select(
-        "doc_id", lang_stopword_density(wl, F.col("lang")).alias("d")
+    staged = df.withColumn("__counts", text_counts(F.col("text"))).select(
+        "doc_id", lang_stopword_density(F.col("__counts"), F.col("lang")).alias("d")
     )
     got = {r["doc_id"]: r["d"] for r in staged.collect()}
     assert got[1] == round(3 / 6, 6)

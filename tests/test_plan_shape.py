@@ -41,21 +41,22 @@ def test_single_arrow_eval_node(web_df):
     assert plan.count("ArrowEvalPython") == 1
 
 
-def test_jvm_langid_outside_arrow_node(spark, web_df):
-    """Default pipeline: language-ID runs as codegen/InSet expressions —
-    the single Arrow node carries only perplexity+scrub (2 UDFs), and the
-    six per-language fraction columns are materialized once (no
-    re-evaluated token filters in the final projection). The registry's
-    language-ID queries (q20, q109) run the same JVM scorer: no Arrow
-    node at all."""
+def test_row_stage_udfs_share_one_arrow_node(spark, web_df):
+    """Default pipeline: the one Arrow node carries the row-signal
+    counter, perplexity and scrub, so ``text`` crosses into Python once
+    for all three; signals and language ID are JVM arithmetic over the
+    counts, with no higher-order lambda left in the plan. The registry's
+    language-ID queries (q20, q109) run the same counter: one Arrow node
+    each."""
     from soda_core_spark.entry_queries import REGISTRY
 
     plan = _plan(QualityFilterPipeline().annotate(web_df))
-    arrow_lines = [l for l in plan.splitlines() if "ArrowEvalPython" in l]
-    assert len(arrow_lines) == 1
-    assert "langid" not in arrow_lines[0]
+    (arrow,) = [l for l in plan.splitlines() if "ArrowEvalPython" in l]
+    for udf in ("count_batch(", "perplexity_prenorm_udf(", "scrub_delta_udf("):
+        assert arrow.count(udf) == 1, arrow
+    assert "lambdafunction" not in plan.lower(), plan
     for q in ("q20_langid_scores", "q109_paragraph_langs"):
-        assert "ArrowEvalPython" not in _plan(REGISTRY[q][0](spark, SF)), q
+        assert _plan(REGISTRY[q][0](spark, SF)).count("ArrowEvalPython") == 1, q
 
 
 def test_langid_accepts_only_bool():

@@ -289,7 +289,7 @@ def test_extended_signals_preserve_n_words_contract(spark):
     )
     base = with_signals(df)
     before = {r.doc_id: r.n_words for r in base.select("doc_id", "n_words").collect()}
-    after_df = with_extended_signals(base.drop("__words", "__wl", "__lines"))
+    after_df = with_extended_signals(base)
     after = {r.doc_id: r.n_words for r in after_df.select("doc_id", "n_words").collect()}
     assert before == after
 

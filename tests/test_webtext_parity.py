@@ -208,12 +208,16 @@ def test_invalid_rule_fails_loudly(spark):
     df = spark.createDataFrame(
         [("http://a/1", "hello world")], ["url", "text"]
     )
-    pipe = QualityFilterPipeline(
-        rules=(FilterRule("oops", "n_wordz < 3", "typo"),),
-        scrub=False, langid=False, perplexity=False,
-    )
-    with pytest.raises(InvalidFilterRuleError, match="oops"):
-        pipe.annotate(df)
+    for bad in ("n_wordz < 3", "n_words <<< 3"):  # unknown column, syntax
+        pipe = QualityFilterPipeline(
+            rules=(
+                FilterRule("fine", "n_words < 3", "valid"),
+                FilterRule("oops", bad, "typo"),
+            ),
+            scrub=False, langid=False, perplexity=False,
+        )
+        with pytest.raises(InvalidFilterRuleError, match="oops"):
+            pipe.annotate(df)
 
 
 def test_pipeline_metrics_include_score_distributions(web_pages_df):
@@ -308,8 +312,7 @@ def test_scrub_delta_returns_fold_only_changes():
 def test_line_dedup_ratio_multiline(spark):
     """The synthetic corpus is newline-free, so pin the multi-line
     semantics explicitly: 1 − distinct/total over non-empty trimmed
-    lines, 0.0 below 2 lines. (The __lines array is materialized once —
-    a value-preserving plan change in round 3.)"""
+    lines, 0.0 below 2 lines."""
     from soda_core_spark.functions.text import with_signals
 
     rows = [
@@ -325,6 +328,18 @@ def test_line_dedup_ratio_multiline(spark):
     assert got[2] == 0.0
     assert got[3] == 0.0
     assert got[4] == 0.0
+
+
+def test_internal_counts_column_is_reserved(spark):
+    """The row-signal counts ride an internal ``__counts`` column; an
+    input that already has one is rejected, never silently clobbered."""
+    from soda_core_spark.functions.langid import attach_langid
+    from soda_core_spark.functions.text import with_signals
+
+    df = spark.createDataFrame([(1, "a b", 0)], ["doc_id", "text", "__counts"])
+    for attach in (with_signals, attach_langid, QualityFilterPipeline().annotate):
+        with pytest.raises(ValueError, match="internal column"):
+            attach(df)
 
 
 def test_ipv6_rule_scrubs_addresses_not_clock_times():
