@@ -99,7 +99,7 @@ def main() -> int:
 
     # -- dedup stage isolation ------------------------------------------
     from soda_core_spark.operators.dedup import (
-        _band_keys_expr,
+        _banded_frame,
         shingle_frame,
     )
 
@@ -118,16 +118,8 @@ def main() -> int:
 
         timed(spark, "q33_full", REGISTRY["q33_ngram_jaccard_pairs"][0](spark, sf_dir))
     if want("q18_banded"):
-        base = shingle_frame(docs, "doc_id", "text", 3).withColumnRenamed(
-            "shl", "sh"
-        )
-        banded = base.select(
-            "id",
-            F.explode_outer(
-                _band_keys_expr(F.col("sh"), 16, 4, True)
-            ).alias("band"),
-        )
-        timed(spark, "q18_banded", banded)
+        base = shingle_frame(docs, "doc_id", "text", 3)
+        timed(spark, "q18_banded", _banded_frame(base, 16, 4, True))
     if want("q18_full"):
         from soda_core_spark.entry_queries import REGISTRY
 

@@ -757,7 +757,7 @@ def q32(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-# DuckDB twin of operators.dedup.shingles_col(text, 3): lowercased
+# DuckDB twin of operators.dedup.shingle_frame(df, id, text, 3): lowercased
 # whitespace-split words; >=3 words -> distinct word trigrams, else the
 # whole (joined) word list as a single shingle. Empty docs are excluded
 # upstream in both engines.

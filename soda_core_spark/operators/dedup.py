@@ -86,8 +86,13 @@ def _spread(df: DataFrame) -> DataFrame:
     key — cheap relative to the HOF work it parallelizes; skipped when the
     input is already wide (the 100 TB case).
 
-    Spark Connect safe: ``.rdd`` / ``sparkContext`` don't exist on Connect
-    DataFrames, so on that path:
+    Width is ESTIMATED from the plan's input files, never measured:
+    ``df.rdd.getNumPartitions()`` would plan the frame for execution, and
+    under AQE that runs every upstream shuffle stage of the input as a
+    hidden Spark job at plan-build time (the real query then runs it
+    again). Also Spark Connect safe (Connect frames have no ``.rdd``; the
+    target width falls back to ``spark.sql.shuffle.partitions`` when
+    ``sparkContext`` is unavailable):
 
     * ``inputFiles()`` unavailable or empty → NOT a file scan. Such frames
       are typically post-shuffle (join/agg output) and already wide — a
@@ -104,15 +109,12 @@ def _spread(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     try:
         par = spark.sparkContext.defaultParallelism
-        n = df.rdd.getNumPartitions()
-        return df.repartition(par) if n < par else df
     except Exception:
-        pass
-    try:
-        # may be non-numeric ("auto" under some AQE deployments)
-        par = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except Exception:
-        par = 200
+        try:
+            # may be non-numeric ("auto" under some AQE deployments)
+            par = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        except Exception:
+            par = 200
     try:
         files = df.inputFiles()
     except Exception:
@@ -148,8 +150,17 @@ def _parse_bytes(v: str) -> int:
     return int(s)
 
 
-def shingles_col(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram array (default 3-shingles), lowercased.
+def _words_of(text: Column) -> Column:
+    """Lowercased non-empty whitespace tokens — the shared tokenization
+    of the shingle operators, materialized ONCE per row as ``__w`` (see
+    :func:`shingle_frame`)."""
+    return words_col(F.lower(text))
+
+
+def _shingles_of_words(n: int) -> Column:
+    """Distinct word n-gram array (``n``-shingles) of the token-array
+    attribute ``__w`` (:func:`_words_of`), as ONE SQL text — a single
+    py4j call instead of one per Column-API node and lambda.
 
     Documents with 1..n-1 words get ONE whole-text shingle; documents
     with ZERO words (empty, whitespace-only, or NULL text) get an
@@ -157,34 +168,18 @@ def shingles_col(text: Column, n: int = 3) -> Column:
     jaccard-1.0 duplicate of every other empty doc, a degenerate hot
     key at corpus scale and a cross-engine hazard (DuckDB's
     ``array_to_string([])`` is NULL while Spark's ``concat_ws`` is '',
-    so the two engines disagreed on exactly these rows).
-
-    Inline form: the tokenization is re-evaluated per reference; use
-    :func:`shingle_frame` wherever the array feeds more than one
-    expression."""
-    return _shingles_of_words(_words_of(text), n)
-
-
-def _words_of(text: Column) -> Column:
-    """Lowercased non-empty whitespace tokens — the shared tokenization
-    of :func:`shingles_col`, exposed so callers can materialize it ONCE
-    per row (see :func:`shingle_frame`)."""
-    return words_col(F.lower(text))
-
-
-def _shingles_of_words(w: Column, n: int) -> Column:
-    """Shingle array from a token-array column — the grams, the
-    1..n-1-word whole-text shingle and the empty-set policy of
-    :func:`shingles_col`."""
-    k = F.size(w)
-    cols = [F.slice(w, i + 1, k - (n - 1)) for i in range(n)]
-    grams = cols[0]
-    for c in cols[1:]:
-        grams = F.zip_with(grams, c, lambda a, b: F.concat_ws(" ", a, b))
-    return F.when(k >= n, F.array_distinct(grams)).otherwise(
-        F.when(k > 0, F.array(F.concat_ws(" ", w))).otherwise(
-            F.array().cast("array<string>")
+    so the two engines disagreed on exactly these rows)."""
+    cut = f"size(__w) - {n - 1}"
+    grams = f"slice(__w, 1, {cut})"
+    for i in range(2, n + 1):
+        grams = (
+            f"zip_with({grams}, slice(__w, {i}, {cut}), "
+            "(x, y) -> concat_ws(' ', x, y))"
         )
+    return F.expr(
+        f"CASE WHEN size(__w) >= {n} THEN array_distinct({grams}) "
+        "WHEN size(__w) > 0 THEN array(concat_ws(' ', __w)) "
+        "ELSE CAST(array() AS ARRAY<STRING>) END"
     )
 
 
@@ -196,10 +191,11 @@ def shingle_frame(
     extra_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """``(id, *extra_cols, shl)`` with the tokenization materialized ONCE
-    per row — the fast formulation of ``select(id, shingles_col(text))``.
+    per row, and ``shl`` the distinct n-shingle array of the lowercased
+    text (:func:`_shingles_of_words`).
 
-    Why a DataFrame helper instead of the single :func:`shingles_col`
-    expression: higher-order functions run interpreted with NO
+    Why a DataFrame helper instead of one inline shingle expression over
+    the text: higher-order functions run interpreted with NO
     common-subexpression elimination, and the inline shingle expression
     references ``split(lower(text))`` ~3n times internally — so every
     evaluation used to re-tokenize the full text ~9 times (n=3), and
@@ -229,15 +225,8 @@ def shingle_frame(
     return step.select(
         "id",
         *extra_cols,
-        _shingles_of_words(F.col("__w"), n).alias("shl"),
+        _shingles_of_words(n).alias("shl"),
     )
-
-
-def _salted_hash(i: int):
-    # NB: must be a single-param lambda via closure — a default-arg lambda
-    # (lambda s, i=i: ...) is seen by pyspark as the two-param
-    # (element, index) form and the salt silently becomes the array index
-    return lambda s: F.xxhash64(F.lit(i), s)
 
 
 def plan_lsh_params(
@@ -310,25 +299,24 @@ def portable_token_hash(col: Column) -> Column:
 PORTABLE_HASH_BITS = 60
 
 
-def _md5_salted(i: int):
-    # single-param lambda via closure — same reason as _salted_hash
-    return lambda s: F.md5(F.concat_ws("|", F.lit(str(i)), s))
+def _minhash_mins(num_hashes: int, portable_hash: bool) -> list[str]:
+    """MinHash signature m_0..m_{num_hashes-1} as per-row SQL texts over
+    the MATERIALIZED shingle-array attribute ``shl`` (:func:`shingle_frame`):
+    m_i = ``array_min(transform(shl, x -> xxhash64(i, x)))``, or in
+    portable mode the lexicographic min of md5("i|shingle") —
+    reproducible in any engine with md5. ``i`` is an int literal, typed
+    as ``F.lit(i)`` types it; no caller text enters the SQL.
 
-
-def _minhash_mins(
-    sh: Column, num_hashes: int, portable_hash: bool
-) -> list[Column]:
-    """MinHash signature m_0..m_{num_hashes-1} as per-row expressions
-    over a MATERIALIZED shingle-array attribute (:func:`shingle_frame`):
-    m_i = ``array_min(transform(sh, hash_i))`` with hash_i = xxhash64
-    salted by i, or in portable mode the lexicographic min of
-    md5("i|shingle") — reproducible in any engine with md5.
+    SQL text, not Column-API lambdas: each ``F.transform`` with a Python
+    lambda costs dozens of py4j round trips to build, so the 32 mins of
+    one default call used to dominate plan building; the text reaches the
+    engine in one call per expression and plans to the same tree.
 
     This is the min-over-a-doc's-shingle-hashes the former explode →
     groupBy(id) aggregate computed, value-identical (``array_min``
     ignores no elements here: shingle hashes are never NULL). The
     aggregate form existed to dodge re-evaluating the INLINE shingle
-    expression per hash; with ``sh`` an attribute that hazard is gone,
+    expression per hash; with ``shl`` an attribute that hazard is gone,
     and dropping the aggregate removes an Exchange on id — plus, in
     portable mode, a Sort + SortAggregate pair per evaluation (min over
     md5 STRINGS has no mutable hash-aggregation buffer, so Spark used
@@ -336,20 +324,27 @@ def _minhash_mins(
     r6 bench: 2 Exchange + 2 Sort + 4 SortAggregate removed from q18.
     The md5/xxhash64 work per shingle is unchanged — that is the
     declared computation."""
-    salted = _md5_salted if portable_hash else _salted_hash
-    return [F.array_min(F.transform(sh, salted(i))) for i in range(num_hashes)]
+    h = "md5(concat_ws('|', '{i}', x))" if portable_hash else "xxhash64({i}, x)"
+    return [
+        f"array_min(transform(shl, x -> {h.format(i=i)}))"
+        for i in range(num_hashes)
+    ]
 
 
 def _band_keys_expr(
-    sh: Column, num_hashes: int, bands: int, portable_hash: bool
+    num_hashes: int,
+    bands: int,
+    portable_hash: bool,
+    mins: list[str] | None = None,
 ) -> Column:
-    """Array of ``bands`` LSH band keys as ONE per-row expression over a
-    materialized shingle-array attribute — the signature+banding stage
-    of MinHash LSH with no shuffle at all (signatures:
-    :func:`_minhash_mins`). Band b hashes its ``rows = num_hashes //
+    """Array of ``bands`` LSH band keys as ONE SQL expression — the
+    signature+banding stage of MinHash LSH with no shuffle at all. The
+    signature values are ``mins`` (SQL texts or attribute names; the
+    first ``bands * rows`` are used), by default the :func:`_minhash_mins`
+    expressions over ``shl``. Band b hashes its ``rows = num_hashes //
     bands`` signature slice with the band index:
-    ``xxhash64(b, concat_ws(",", m..))`` or, portable,
-    ``md5(concat_ws(",", "b", m..))``.
+    ``xxhash64(b, concat_ws(',', m..))`` or, portable,
+    ``md5(concat_ws(',', 'b', m..))``.
 
     Raises ``ValueError`` unless ``1 <= bands <= num_hashes``: with more
     bands than hashes ``rows`` is 0, every document gets the same
@@ -360,39 +355,39 @@ def _band_keys_expr(
             f"num_hashes={num_hashes}"
         )
     rows = num_hashes // bands
-    mins = _minhash_mins(sh, bands * rows, portable_hash)
-    slices = [mins[b * rows:(b + 1) * rows] for b in range(bands)]
-    if portable_hash:
-        keys = [
-            F.md5(F.concat_ws(",", F.lit(str(b)), *m))
-            for b, m in enumerate(slices)
-        ]
-    else:
-        keys = [
-            F.xxhash64(
-                F.lit(b), F.concat_ws(",", *[x.cast("string") for x in m])
-            )
-            for b, m in enumerate(slices)
-        ]
-    return F.array(*keys)
+    if mins is None:
+        mins = _minhash_mins(bands * rows, portable_hash)
+    keys = []
+    for b in range(bands):
+        m = mins[b * rows:(b + 1) * rows]
+        if portable_hash:
+            keys.append(f"md5(concat_ws(',', '{b}', {', '.join(m)}))")
+        else:
+            cast = ", ".join(f"CAST({x} AS STRING)" for x in m)
+            keys.append(f"xxhash64({b}, concat_ws(',', {cast}))")
+    return F.expr(f"array({', '.join(keys)})")
 
 
 def _banded_frame(
-    base: DataFrame, num_hashes: int, bands: int, portable_hash: bool
+    base: DataFrame,
+    num_hashes: int,
+    bands: int,
+    portable_hash: bool,
+    mins: list[str] | None = None,
 ) -> DataFrame:
     """``(id, band)`` LSH band keys per document of a :func:`shingle_frame`
     ``(id, shl)`` — one tokenization per row, per-row signatures, no
-    aggregate."""
-    return base.select(
-        "id",
-        F.explode_outer(
-            _band_keys_expr(F.col("shl"), num_hashes, bands, portable_hash)
-        ).alias("band"),
-    )
+    aggregate (``mins``: see :func:`_band_keys_expr`)."""
+    keys = _band_keys_expr(num_hashes, bands, portable_hash, mins)
+    return base.select("id", F.explode_outer(keys).alias("band"))
 
 
 def _band_candidate_pairs(
-    base: DataFrame, num_hashes: int, bands: int, portable_hash: bool
+    base: DataFrame,
+    num_hashes: int,
+    bands: int,
+    portable_hash: bool,
+    mins: list[str] | None = None,
 ) -> DataFrame:
     """Distinct ``(id_a, id_b)``, id_a < id_b, of the documents of a
     :func:`shingle_frame` that share at least one LSH band key.
@@ -401,14 +396,24 @@ def _band_candidate_pairs(
     row) — NOT over the shingle arrays, which would be duplicated
     ``bands``× through the shuffle; callers re-attach the arrays to the
     deduplicated pairs (:func:`_attach_shingles`), so each doc's
-    shingles cross the wire once per side. A giant duplicate cluster
-    makes a hot band key; AQE skew-join splits it
-    (spark.sql.adaptive.skewJoin)."""
-    banded = _banded_frame(base, num_hashes, bands, portable_hash)
-    a, b = banded.alias("a"), banded.alias("b")
+    shingles cross the wire once per side.
+
+    One shared band shuffle: the ``MERGE`` hint makes the self-join a
+    sort-merge join at every input size, so both sides need the same
+    planner-inserted ``Exchange hashpartitioning(band)`` over the same
+    subtree, and exchange reuse runs it ONCE — each signature is
+    computed once per plan. The planner's own pick on a small input is a
+    broadcast join, whose two sides each recompute every signature. At
+    corpus scale the sort-merge plan is what the planner picks anyway.
+    The shuffle stays planner-inserted (not a user ``repartition``), so
+    AQE's skew-join rule (spark.sql.adaptive.skewJoin), which only
+    splits such shuffles, still splits the hot band key of a giant
+    duplicate cluster."""
+    banded = _banded_frame(base, num_hashes, bands, portable_hash, mins)
+    a, b = banded.alias("a"), banded.hint("MERGE").alias("b")
     return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        a.join(b, F.expr("a.band = b.band AND a.id < b.id"))
+        .selectExpr("a.id AS id_a", "b.id AS id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
 
@@ -419,16 +424,18 @@ def _attach_shingles(
     """``pairs`` with each side's shingle array re-attached from the
     ``(id, col)`` frame ``sets`` by two id-joins, as ``sh_a`` / ``sh_b``
     (verify with :func:`_jaccard`)."""
-    sh_a = sets.select(F.col("id").alias("id_a"), F.col(col).alias("sh_a"))
-    sh_b = sets.select(F.col("id").alias("id_b"), F.col(col).alias("sh_b"))
+    sh_a = sets.selectExpr("id AS id_a", f"{col} AS sh_a")
+    sh_b = sets.selectExpr("id AS id_b", f"{col} AS sh_b")
     return pairs.join(sh_a, "id_a").join(sh_b, "id_b")
 
 
-def _jaccard(a: Column, b: Column) -> Column:
-    """Exact set Jaccard of two distinct-element arrays, as a double."""
-    inter = F.size(F.array_intersect(a, b)).cast("double")
-    union = F.size(F.array_union(a, b)).cast("double")
-    return inter / union
+def _jaccard(a: str, b: str) -> Column:
+    """Exact set Jaccard of two distinct-element array attributes, as a
+    double."""
+    return F.expr(
+        f"CAST(size(array_intersect({a}, {b})) AS DOUBLE)"
+        f" / CAST(size(array_union({a}, {b})) AS DOUBLE)"
+    )
 
 
 def minhash_near_duplicates(
@@ -445,11 +452,13 @@ def minhash_near_duplicates(
     verification.
 
     Scale path, stage by stage:
-    1. signatures + band keys are per-row column expressions over the
-       materialized shingle array — no shuffle (:func:`_minhash_mins`,
-       :func:`_band_keys_expr`);
-    2. the band self-join runs over bare ``(id, band)`` pairs and yields
-       distinct candidates (:func:`_band_candidate_pairs`);
+    1. signatures + band keys are ONE per-row SQL expression over the
+       materialized shingle array — no shuffle, a handful of py4j calls
+       to build (:func:`_minhash_mins`, :func:`_band_keys_expr`);
+    2. the band self-join runs over bare ``(id, band)`` pairs through
+       ONE shared ``hashpartitioning(band)`` shuffle, so each signature
+       is computed once, and yields distinct candidates
+       (:func:`_band_candidate_pairs`);
     3. shingle arrays are re-attached by two id-joins;
     4. exact Jaccard verifies candidates only.
 
@@ -464,9 +473,8 @@ def minhash_near_duplicates(
     pairs = _band_candidate_pairs(base, num_hashes, bands, portable_hash)
     return (
         _attach_shingles(pairs, base, "shl")
-        .withColumn("jaccard", _jaccard(F.col("sh_a"), F.col("sh_b")))
+        .select("id_a", "id_b", _jaccard("sh_a", "sh_b").alias("jaccard"))
         .where(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -489,9 +497,7 @@ def ngram_jaccard_pairs(
         key.alias("k"),
         _words_of(F.col(text_col)).alias("__w"),
     )
-    base = step.select(
-        "id", "k", _shingles_of_words(F.col("__w"), n).alias("sh")
-    )
+    base = step.select("id", "k", _shingles_of_words(n).alias("sh"))
     a, b = base.alias("a"), base.alias("b")
     pairs = a.join(
         b, (F.col("a.k") == F.col("b.k")) & (F.col("a.id") < F.col("b.id"))
@@ -499,7 +505,7 @@ def ngram_jaccard_pairs(
     return pairs.select(
         F.col("a.id").alias("id_a"),
         F.col("b.id").alias("id_b"),
-        _jaccard(F.col("a.sh"), F.col("b.sh")).alias("jaccard"),
+        _jaccard("a.sh", "b.sh").alias("jaccard"),
     ).where(F.col("jaccard") >= threshold)
 
 
@@ -710,21 +716,21 @@ def _shared_shingle_counts(
       — bounded; AQE skew-join still splits oversized partitions;
     * each scan tokenizes once (:func:`shingle_frame`)."""
     key = _shingle_hash(hash_shingles)
-    sizes = base.select("id", F.size("shl").cast("long").alias("n_sh"))
-    ex = base.select("id", F.explode_outer("shl").alias("s"))
+    ex = base.selectExpr("id", "explode_outer(shl) AS s")
     if key is not None:
         ex = ex.select("id", key(F.col("s")).alias("s"))
     if max_doc_freq is not None:
-        freq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df_"))
+        freq = ex.groupBy("s").agg(F.expr("count(1) AS df_"))
         ex = ex.join(freq, "s").where(F.col("df_") <= max_doc_freq).drop("df_")
     a, b = ex.alias("a"), ex.hint("SHUFFLE_HASH").alias("b")
     inter = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
+        a.join(b, F.expr("a.s = b.s AND a.id < b.id"))
+        .selectExpr("a.id AS id_a", "b.id AS id_b")
+        .groupBy("id_a", "id_b")
+        .agg(F.expr("CAST(count(1) AS BIGINT) AS n_shared"))
     )
-    na = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
+    na = base.selectExpr("id AS id_a", "CAST(size(shl) AS BIGINT) AS n_a")
+    nb = base.selectExpr("id AS id_b", "CAST(size(shl) AS BIGINT) AS n_b")
     return inter.join(F.broadcast(na), "id_a").join(F.broadcast(nb), "id_b")
 
 
@@ -789,16 +795,11 @@ def ngram_jaccard_all_pairs(
                 stacklevel=2,
             )
     base = shingle_frame(df, id_col, text_col, n)
-    jac = F.col("n_shared") / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
+    jac = "n_shared / (n_a + n_b - n_shared)"
     return (
         _shared_shingle_counts(base, max_doc_freq, hash_shingles)
-        .where(jac >= threshold)
-        .select(
-            "id_a",
-            "id_b",
-            "n_shared",
-            F.round(jac, 6).alias("jaccard"),
-        )
+        .where(F.expr(jac) >= threshold)
+        .selectExpr("id_a", "id_b", "n_shared", f"round({jac}, 6) AS jaccard")
     )
 
 
@@ -896,9 +897,7 @@ def decontaminate(
         benchmark_df.where(F.length(F.trim(t)) > 0)
         .select(_words_of(t).alias("__w"))
         .select(
-            F.explode_outer(
-                _shingles_of_words(F.col("__w"), n)
-            ).alias("s")
+            F.explode_outer(_shingles_of_words(n)).alias("s")
         )
         .distinct()
     )
@@ -1818,11 +1817,13 @@ def lsh_recall_audit(
     surfaced), ``recall`` (6 dp; 1.0 on a dup-free corpus).
 
     Shape for scale: both pair sets reuse the library operators
-    (inverted-index self-join; hash-once signatures + band join); the
-    audit adds ONE left-anti join on (id_a, id_b) pairs and a 1-row
-    aggregate. The exact side is the expensive leg — hence the
-    sample-upstream prescription, which preserves an unbiased recall
-    estimate because sampling docs uniformly subsamples true pairs."""
+    (inverted-index self-join; hash-once signatures + band join), each
+    evaluated ONCE; the audit adds ONE full-outer join on (id_a, id_b)
+    with a match marker per side and a 1-row aggregate that counts both
+    sets and the exact-only pairs together. The exact side is the
+    expensive leg — hence the sample-upstream prescription, which
+    preserves an unbiased recall estimate because sampling docs
+    uniformly subsamples true pairs."""
     exact = ngram_jaccard_all_pairs(
         df,
         id_col=id_col,
@@ -1831,7 +1832,7 @@ def lsh_recall_audit(
         threshold=jaccard_threshold,
         max_doc_freq=None,  # ground truth: no posting cap
         hash_shingles=None,  # raw shingle strings join fine at audit scale
-    ).select("id_a", "id_b")
+    ).selectExpr("id_a", "id_b", "true AS __e")
     lsh = minhash_near_duplicates(
         df,
         text_col=text_col,
@@ -1841,30 +1842,19 @@ def lsh_recall_audit(
         shingle_n=3,
         jaccard_threshold=jaccard_threshold,
         portable_hash=portable_hash,
-    ).select("id_a", "id_b")
-    missed = exact.join(lsh, ["id_a", "id_b"], "left_anti")
-    counts = exact.agg(
-        F.count(F.lit(1)).cast("long").alias("n_exact_pairs")
-    ).crossJoin(
-        lsh.agg(F.count(F.lit(1)).cast("long").alias("n_lsh_pairs"))
-    ).crossJoin(
-        missed.agg(F.count(F.lit(1)).cast("long").alias("n_missed"))
+    ).selectExpr("id_a", "id_b", "true AS __l")
+    # both pair sets are distinct, so the full-outer join is 1:1
+    counts = exact.join(lsh, ["id_a", "id_b"], "full_outer").selectExpr(
+        "CAST(count(__e) AS BIGINT) AS n_exact_pairs",
+        "CAST(count(__l) AS BIGINT) AS n_lsh_pairs",
+        "CAST(count_if(__e AND __l IS NULL) AS BIGINT) AS n_missed",
     )
-    return counts.select(
+    return counts.selectExpr(
         "n_exact_pairs",
         "n_lsh_pairs",
         "n_missed",
-        F.when(
-            F.col("n_exact_pairs") > 0,
-            F.round(
-                F.lit(1.0)
-                - F.col("n_missed").cast("double")
-                / F.col("n_exact_pairs").cast("double"),
-                6,
-            ),
-        )
-        .otherwise(F.lit(1.0))
-        .alias("recall"),
+        "CASE WHEN n_exact_pairs > 0 THEN round(1.0D - CAST(n_missed AS "
+        "DOUBLE) / CAST(n_exact_pairs AS DOUBLE), 6) ELSE 1.0D END AS recall",
     )
 
 
@@ -1894,35 +1884,34 @@ def minhash_calibration(
     the INTEGER match count k (summed exactly; divided once by
     n·num_hashes at the end), and exact Jaccard aggregates as
     ``round(J·10⁶)`` integers — the q114 integer-sum discipline, so no
-    mean ever depends on float summation order. Scale shape: the
-    signatures and candidate pairs of :func:`minhash_near_duplicates`
-    (:func:`_minhash_mins`, :func:`_band_candidate_pairs`); signature
-    vectors and shingle arrays re-attach by id-joins (num_hashes values
-    per side, once per pair). Raises ``ValueError`` unless
-    ``1 <= bands <= num_hashes``."""
+    mean ever depends on float summation order. Scale shape: ONE
+    ``(id, shl, m0..m{num_hashes-1})`` signature frame
+    (:func:`_minhash_mins`) feeds everything — the band keys are built
+    over its ``m*`` columns (:func:`_band_candidate_pairs`), and each
+    pair side re-attaches its signature vector and shingle array from
+    it by one id-join (num_hashes values per side, once per pair).
+    Raises ``ValueError`` unless ``1 <= bands <= num_hashes``."""
     base = shingle_frame(df, id_col, text_col, shingle_n)
-    pairs = _band_candidate_pairs(base, num_hashes, bands, portable_hash)
-    mins = _minhash_mins(F.col("shl"), num_hashes, portable_hash)
-    sig = base.select("id", *[m.alias(f"m{i}") for i, m in enumerate(mins)])
-    sig_a = sig.select(
-        F.col("id").alias("id_a"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(num_hashes)],
+    mins = _minhash_mins(num_hashes, portable_hash)
+    m = [f"m{i}" for i in range(num_hashes)]
+    sig = base.selectExpr(
+        "id", "shl", *[f"{e} AS {c}" for e, c in zip(mins, m)]
     )
-    sig_b = sig.select(
-        F.col("id").alias("id_b"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(num_hashes)],
+    pairs = _band_candidate_pairs(sig, num_hashes, bands, portable_hash, m)
+    sig_a = sig.selectExpr(
+        "id AS id_a", "shl AS sh_a", *[f"m{i} AS a{i}" for i in range(num_hashes)]
     )
-    j = _attach_shingles(
-        pairs.join(sig_a, "id_a").join(sig_b, "id_b"), base, "shl"
+    sig_b = sig.selectExpr(
+        "id AS id_b", "shl AS sh_b", *[f"m{i} AS b{i}" for i in range(num_hashes)]
     )
-    est_k = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
-    ).cast("long")
-    jac = _jaccard(F.col("sh_a"), F.col("sh_b"))
+    j = pairs.join(sig_a, "id_a").join(sig_b, "id_b")
+    est_k = " + ".join(
+        f"CASE WHEN a{i} = b{i} THEN 1 ELSE 0 END" for i in range(num_hashes)
+    )
+    jac = _jaccard("sh_a", "sh_b")
     binned = j.select(
         F.least(F.floor(jac * 10), F.lit(9)).cast("long").alias("jaccard_bin"),
-        est_k.alias("__k"),
+        F.expr(f"CAST({est_k} AS BIGINT)").alias("__k"),
         F.round(jac * F.lit(1000000.0)).cast("long").alias("__j6"),
     )
     agg = binned.groupBy("jaccard_bin").agg(
@@ -2761,7 +2750,7 @@ def prefix_filter_jaccard(
             "id_a", "id_b",
             F.size("sh_a").cast("long").alias("size_a"),
             F.size("sh_b").cast("long").alias("size_b"),
-            F.round(_jaccard(F.col("sh_a"), F.col("sh_b")), 6).alias("jaccard"),
+            F.round(_jaccard("sh_a", "sh_b"), 6).alias("jaccard"),
         )
         .where(F.col("jaccard") >= t)
         .orderBy("id_a", "id_b")

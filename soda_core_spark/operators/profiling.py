@@ -1943,7 +1943,6 @@ def distinct_ngram_diversity(
     # NB: single-param lambdas via closure factories — a default-arg
     # lambda (lambda i, _n=n: ...) is seen by pyspark's transform as the
     # two-param (element, index) form and n silently becomes the index
-    # (the dedup._salted_hash gotcha)
     def _gram_at(n: int):
         return lambda i: F.concat_ws(" ", F.slice(t, i, n))
 

@@ -388,6 +388,24 @@ def test_spread_never_touches_rdd_on_connect_style_frame(spark, tmp_path):
     assert calls["repartitioned_to"] == 16
 
 
+def test_spread_starts_no_spark_job(spark):
+    """_spread estimates width from the plan's input files: measuring it
+    with ``.rdd.getNumPartitions()`` plans the frame for execution, and
+    under AQE that runs the upstream shuffle stages of an aggregated
+    input as a hidden job at plan-build time."""
+    from soda_core_spark.operators.dedup import _spread
+
+    sc = spark.sparkContext
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    agg = docs.groupBy("doc_id").agg(F.first("text").alias("text"))
+    sc.setJobGroup("spread-starts-no-job", "_spread on an aggregated frame")
+    try:
+        _spread(agg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("spread-starts-no-job")) == []
+
+
 def test_ngram_cap_default_warns_once():
     """Implicit posting-list cap is announced (ADVICE r2): default call
     warns once; explicit int or None never warns."""
@@ -511,7 +529,7 @@ def test_ivf_topk_recall_vs_exact(spark):
 def _py_shingles(text, n=3):
     import re as _re
 
-    # split on the SAME whitespace class as shingles_col / the DuckDB CTE
+    # split on the SAME whitespace class as shingle_frame / the DuckDB CTE
     # ([ \t\n\r]+) — str.split() would also split on \x0b/\f/NBSP and the
     # oracle would silently diverge on such corpora
     words = [w for w in _re.split(r"[ \t\n\r]+", (text or "").lower()) if w]
@@ -558,6 +576,53 @@ def test_jaccard_all_pairs_matches_python_oracle_random(spark):
         jac = inter / len(shingled[a] | shingled[b])
         if jac >= 0.05:
             want[(a, b)] = (inter, round(jac, 6))
+    assert got == want
+
+
+@pytest.mark.parametrize("num_hashes,bands", [(16, 4), (10, 3)])
+def test_portable_band_keys_match_md5_contract(spark, num_hashes, bands):
+    """Portable-mode LSH band keys equal a hashlib statement of the
+    contract, with no Spark computation on the oracle side:
+    m_i = min over shingles of md5("i|shingle"), and band b keys the
+    slice of rows = num_hashes // bands mins as md5("b,m..,m.."); with
+    10 hashes in 3 bands, m9 is unused. The texts carry SQL-quoting
+    hazards (', \\), tabs/CR, NBSP (not a separator), 1- and 2-word
+    documents, and empty/blank/NULL texts (which get no keys at all)."""
+    import hashlib
+
+    from soda_core_spark.operators.dedup import _banded_frame, shingle_frame
+
+    docs = [
+        (1, "it's a 'quoted' text with a \\ backslash and \\' both"),
+        (2, "Tabs\tand\r\ncarriage\rreturns  split   words here"),
+        (3, "non\u00a0breaking space stays\u00a0inside one token"),
+        (4, "single"),
+        (5, "two words"),
+        (6, ""),
+        (7, None),
+        (8, "   "),
+        (9, "x' OR '1'='1 -- \\n is not a newline"),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    base = shingle_frame(df, "doc_id", "text", 3)
+    got: dict = {}
+    for r in _banded_frame(base, num_hashes, bands, True).collect():
+        got.setdefault(r["id"], []).append(r["band"])
+
+    def md5(s):
+        return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+    rows = num_hashes // bands
+    want = {}
+    for i, t in docs:
+        if t is None or not t.strip(" "):
+            continue
+        sh = _py_shingles(t)
+        m = [min(md5(f"{h}|{s}") for s in sh) for h in range(num_hashes)]
+        want[i] = [
+            md5(",".join([str(b)] + m[b * rows:(b + 1) * rows]))
+            for b in range(bands)
+        ]
     assert got == want
 
 

@@ -5,23 +5,21 @@ is visible on the clean test corpus (no NULL texts/embeddings/groups
 there). See BENCH/JOURNAL.md round-5 final session."""
 
 import pytest
-from pyspark.sql import functions as F
 
 
 def test_shingles_empty_and_null_text_have_no_shingles(spark):
-    from soda_core_spark.operators.dedup import shingles_col
+    from soda_core_spark.operators.dedup import shingle_frame
 
     df = spark.createDataFrame(
         [(1, None), (2, ""), (3, "   \t\n"), (4, "one two")],
         "id long, text string",
     )
-    got = {
-        r["id"]: r["sh"]
-        for r in df.select("id", shingles_col(F.col("text")).alias("sh")).collect()
-    }
-    assert got[1] == []       # NULL text: no shingles, not ['']
-    assert got[2] == []       # empty text
-    assert got[3] == []       # whitespace-only
+    # shingle_frame drops the rows that have no shingles, so a missing id
+    # reads as the empty set
+    got = {r["id"]: r["shl"] for r in shingle_frame(df, "id", "text", 3).collect()}
+    assert got.get(1, []) == []   # NULL text: no shingles, not ['']
+    assert got.get(2, []) == []   # empty text
+    assert got.get(3, []) == []   # whitespace-only
     assert got[4] == ["one two"]   # short doc keeps its whole-text shingle
 
 

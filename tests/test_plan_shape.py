@@ -173,6 +173,71 @@ def test_minhash_signatures_no_sort_aggregate(spark, query):
     assert "array_min" in plan, plan
 
 
+@pytest.mark.parametrize("which", ["q18_minhash_near_dups", "default_500_docs"])
+def test_minhash_band_join_shares_one_band_shuffle(spark, which):
+    """The band self-join reads ONE planner-inserted
+    ``hashpartitioning(band)`` shuffle on both sides (sort-merge join over
+    an Exchange and its ReusedExchange), so each document's signature is
+    computed once. On 500 documents the planner would otherwise pick a
+    broadcast join whose two sides each recompute every signature. Both
+    hash modes: q18 is portable md5 16/4, the default call is xxhash64
+    32/8."""
+    from soda_core_spark.entry_queries import REGISTRY
+    from soda_core_spark.operators.dedup import minhash_near_duplicates
+
+    if which == "q18_minhash_near_dups":
+        out = REGISTRY[which][0](spark, SF)
+    else:
+        out = minhash_near_duplicates(
+            spark.read.parquet(f"{SF}/documents.parquet")
+        )
+    out.collect()  # finalize the adaptive plan
+    final = _plan(out).split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    assert sum("SortMergeJoin [band" in l for l in lines) == 1, final
+    band_x = [l for l in lines if "Exchange hashpartitioning(band" in l]
+    assert len(band_x) == 2, final
+    assert sum("ReusedExchange" in l for l in band_x) == 1, final
+    assert "BroadcastHashJoin [band" not in final, final
+
+
+def test_band_join_skew_split_on_shared_band_shuffle(spark):
+    """A giant duplicate cluster makes a hot band key. The shared band
+    shuffle is planner-inserted (ENSURE_REQUIREMENTS), so AQE's skew-join
+    rule still splits its hot partition on both sides of the self-join;
+    a user ``repartition("band")`` shuffle is one that rule never splits."""
+    from soda_core_spark.operators.dedup import _band_candidate_pairs, shingle_frame
+
+    rows = [(i, "one boilerplate page mirrored across a whole farm") for i in range(400)]
+    rows += [(1000 + i, f"unique doc {i} w{i} x{i} y{i} z{i}") for i in range(400)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    conf = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+    }
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        pairs = _band_candidate_pairs(
+            shingle_frame(df, "doc_id", "text", 3), 16, 1, True
+        )
+        assert len(pairs.collect()) == 400 * 399 // 2
+        final = _plan(pairs).split("== Initial Plan ==")[0]
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert "SortMergeJoin(skew=true) [band" in final, final
+    assert final.count("AQEShuffleRead skewed") == 2, final
+    assert "ReusedExchange" in final, final
+
+
 @pytest.mark.parametrize(
     "query", ["q33_ngram_jaccard_pairs", "q96_containment_pairs"]
 )
