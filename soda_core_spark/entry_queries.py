@@ -759,8 +759,8 @@ def q32(spark, sf_dir):
 
 # DuckDB twin of operators.dedup.shingle_frame(df, id, text, 3): lowercased
 # whitespace-split words; >=3 words -> distinct word trigrams, else the
-# whole (joined) word list as a single shingle. Empty docs are excluded
-# upstream in both engines.
+# whole (joined) word list as a single shingle. Token-less docs (empty,
+# NULL, or only spaces/tabs/newlines) are excluded upstream in both engines.
 _SHINGLES_CTE = """
     base AS (
       SELECT doc_id AS id,
@@ -768,7 +768,8 @@ _SHINGLES_CTE = """
                                                '[ \\t\\n\\r]+'),
                          x -> x <> '') AS w
       FROM documents
-      WHERE length(trim(coalesce(text, ''))) > 0
+      WHERE length(trim(coalesce(text, ''),
+                        ' ' || chr(9) || chr(10) || chr(13))) > 0
     ),
     sh AS (
       SELECT id,

@@ -157,6 +157,13 @@ def _words_of(text: Column) -> Column:
     return words_col(F.lower(text))
 
 
+def _has_tokens(text: Column) -> Column:
+    """True when ``text`` has at least one :func:`_words_of` token: it is
+    not all ``[ \\t\\n\\r]`` (Spark's one-argument ``trim`` strips spaces
+    only, so a tab/newline-only text would pass a plain ``trim`` test)."""
+    return F.length(F.trim(text, F.lit(" \t\n\r"))) > 0
+
+
 def _shingles_of_words(n: int) -> Column:
     """Distinct word n-gram array (``n``-shingles) of the token-array
     attribute ``__w`` (:func:`_words_of`), as ONE SQL text — a single
@@ -208,15 +215,15 @@ def shingle_frame(
     the ARRAY ATTRIBUTE, not the tokenization. Measured on the r6 bench:
     the q33 plan carried 9 split() calls per scan node before, 1 after.
 
-    Rows with empty/whitespace/NULL text are dropped (they have no
-    shingles — the existing policy of every caller); consequently every
+    Rows with empty/whitespace/NULL text are dropped (:func:`_has_tokens`;
+    they have no shingles — the existing policy of every caller), so every
     returned ``shl`` is non-empty, so ``size(shl)`` equals the exploded
     per-id row count and ``explode_outer`` is row-identical to
     ``explode`` (callers use the outer form to keep
     ``InferFiltersFromGenerate`` from re-inlining the shingle expression
     into scan filters)."""
     t = F.coalesce(F.col(text_col), F.lit(""))
-    filtered = _spread(df.where(F.length(F.trim(t)) > 0))
+    filtered = _spread(df.where(_has_tokens(t)))
     step = filtered.select(
         F.col(id_col).alias("id"),
         *[F.col(c) for c in extra_cols],
@@ -894,7 +901,7 @@ def decontaminate(
     """
     t = F.coalesce(F.col(text_col), F.lit(""))
     bench_sh = (
-        benchmark_df.where(F.length(F.trim(t)) > 0)
+        benchmark_df.where(_has_tokens(t))
         .select(_words_of(t).alias("__w"))
         .select(
             F.explode_outer(_shingles_of_words(n)).alias("s")

@@ -11,7 +11,11 @@ threshold evaluation. Here:
   a single Spark job / single pass over the data; the reference needs
   greedy statement-length batching (``:1577-1644``), Spark doesn't,
 * side queries (reference-data anti-joins, user metric queries) run as
-  their own jobs afterwards,
+  their own jobs, one after another on ONE background thread started as
+  soon as planning has collected them, so their jobs overlap the fused
+  aggregation's analysis and execution (the reference sends them after
+  it, in series); the thread inherits the caller's job group, scheduler
+  pool and tags, and is joined before the results are merged,
 * a failing metric/check marks its checks NOT_EVALUATED without sinking
   the scan (reference per-query error isolation, base.py:876-889).
 """
@@ -21,6 +25,7 @@ from __future__ import annotations
 from datetime import datetime
 from typing import Any, Optional, Union
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 
 from soda_core_spark.operators.checks import (
@@ -62,7 +67,12 @@ def verify_contract(
     primary_keys: Optional[list[str]] = None,
 ) -> ContractVerificationResult:
     """Run all checks of ``contract`` against ``df`` in (at most) one fused
-    aggregation job plus one job per side query.
+    aggregation job plus one job per side query. The side queries run in
+    order on one background thread that overlaps the fused aggregation and
+    is joined before this returns; their jobs carry the caller's job group,
+    description, scheduler pool and tags. If the fused job fails at
+    runtime, each metric re-runs as its own job and the result records it
+    (``fused_fallback_cause``).
 
     ``df`` defaults to ``spark.table(contract.dataset)`` /
     ``datasets[contract.dataset]``. ``datasets`` supplies reference-data
@@ -176,7 +186,7 @@ def _verify_contract_body(
         try:
             plans.append((check, CHECK_PLANNERS[check.type](check, ctx), None))
         except Exception as e:  # planning error → NOT_EVALUATED, scan continues
-            plans.append((check, None, f"planning failed: {e}"))
+            plans.append((check, None, f"planning failed: {_cause(e)}"))
 
     # --- metric dedup + fused aggregation ----------------------------------
     agg_metrics: dict[str, AggMetric] = {}
@@ -189,74 +199,48 @@ def _verify_contract_body(
         for sq in plan.side_queries:
             side_queries.setdefault(sq.key, sq)
 
-    # Error isolation (reference: per-query try/except, base.py:876-889).
-    # Fusing all metrics into one df.agg must not let one bad expression
-    # (parse/analysis error in a check's filter/condition/expression) sink
-    # the whole scan: build+analyze each metric individually first; fuse
-    # only the valid ones; on a runtime failure of the fused job fall back
-    # to per-metric jobs. A metric with no value leaves its checks
-    # NOT_EVALUATED via None-propagation.
     values: dict[str, Any] = {}
     #: metric/side-query key → cause of its failure; carried into the
     #: measurement and into the message of every check left NOT_EVALUATED
     errors: dict[str, str] = {}
     measurements: list[Measurement] = []
-    built: list[AggMetric] = []
-    built_cols = []
-    candidates: list[tuple[AggMetric, Any]] = []
-    for m in agg_metrics.values():
-        try:
-            candidates.append((m, m.build()))
-        except Exception as e:
-            errors[m.key] = _cause(e)
-            measurements.append(Measurement(m.key, None, m.name, errors[m.key]))
-    # analysis cost: ONE batched analyze when every expression is valid
-    # (the overwhelmingly common case — O(1) driver roundtrips however
-    # many metrics a contract has); only a failing batch falls back to
-    # per-metric analysis to isolate the bad expression(s)
-    if candidates:
-        try:
-            filtered.select(
-                *[c.alias(f"__soda_validate_{i}") for i, (_m, c) in enumerate(candidates)]
-            )
-            built = [m for m, _c in candidates]
-            built_cols = [c for _m, c in candidates]
-        except Exception:
-            for m, col in candidates:
-                try:
-                    filtered.select(col.alias("__soda_validate"))
-                    built.append(m)
-                    built_cols.append(col)
-                except Exception as e:
-                    errors[m.key] = _cause(e)
-                    measurements.append(
-                        Measurement(m.key, None, m.name, errors[m.key])
-                    )
-    if built:
-        exprs = [c.alias(f"m_{i}") for i, c in enumerate(built_cols)]
-        try:
-            row = filtered.agg(*exprs).collect()[0]
-            rows = [row[i] for i in range(len(built))]
-        except Exception:
-            rows = []
-            for m, c in zip(built, built_cols):
-                try:
-                    rows.append(filtered.agg(c.alias("m_0")).collect()[0][0])
-                except Exception as e:
-                    errors[m.key] = _cause(e)
-                    rows.append(None)
-        for m, v in zip(built, rows):
-            if v is None and m.coerce_zero and m.key not in errors:
-                v = 0  # SUM(CASE WHEN ...) is NULL over zero rows (ref missing_check.py:137-140)
-            values[m.key] = v
-            measurements.append(Measurement(m.key, v, m.name, errors.get(m.key)))
+    # side queries start now, on one thread, and stay sequential among
+    # themselves; each keeps its own try/except (reference per-query
+    # isolation, base.py:876-889). The fused aggregation below runs on this
+    # thread meanwhile, and the side thread is joined in its `finally` — so
+    # before verify_contract unpersists a pinned `sample.limit` frame.
+    side_values: dict[str, Any] = {}
+    side_errors: dict[str, str] = {}
+
+    def run_side_queries() -> None:
+        for sq in side_queries.values():
+            try:
+                side_values[sq.key] = sq.run(ctx)
+            except Exception as e:
+                side_errors[sq.key] = _cause(e)
+
+    side_thread = None
+    if side_queries:
+        # InheritableThread copies the caller's local properties (job
+        # group, description, scheduler pool) and tags into the thread in
+        # classic sessions, and the tags in Connect sessions; without
+        # pinned threads it is a plain Thread
+        side_thread = InheritableThread(
+            run_side_queries, session=spark, name="soda-side-queries", daemon=True
+        )
+        side_thread.start()
+    try:
+        fused_fallback_cause = _fused_aggregation(
+            filtered, agg_metrics, values, errors, measurements
+        )
+    finally:
+        if side_thread is not None:
+            side_thread.join()
 
     for sq in side_queries.values():
-        try:
-            v = sq.run(ctx)
-        except Exception as e:
-            v = None  # dependent checks → NOT_EVALUATED
-            errors[sq.key] = _cause(e)
+        v = side_values.get(sq.key)
+        if sq.key in side_errors:
+            errors[sq.key] = side_errors[sq.key]
             # error marker lets evaluators tell "query errored" apart from
             # "query legitimately returned NULL" (reference treats a NULL
             # rows_tested denominator as valid, failed_rows_check.py:133-140)
@@ -311,7 +295,7 @@ def _verify_contract_body(
                     outcome=CheckOutcome.NOT_EVALUATED,
                     threshold=check.threshold.describe(),
                     level=check.level,
-                    message=f"evaluation failed: {e}",
+                    message=f"evaluation failed: {_cause(e)}",
                 )
             )
 
@@ -319,7 +303,82 @@ def _verify_contract_body(
         dataset=contract.dataset,
         check_results=results,
         measurements=measurements,
+        fused_fallback_cause=fused_fallback_cause,
     )
+
+
+def _fused_aggregation(
+    filtered: DataFrame,
+    agg_metrics: dict[str, AggMetric],
+    values: dict[str, Any],
+    errors: dict[str, str],
+    measurements: list[Measurement],
+) -> Optional[str]:
+    """Evaluate every aggregation metric in one ``filtered.agg`` job,
+    filling ``values``/``errors``/``measurements``. Returns the cause of a
+    runtime failure of the fused job (each metric then re-ran as its own
+    job), else None.
+
+    Error isolation (reference: per-query try/except, base.py:876-889).
+    Fusing all metrics into one df.agg must not let one bad expression
+    (parse/analysis error in a check's filter/condition/expression) sink
+    the whole scan: build+analyze each metric individually first; fuse
+    only the valid ones; on a runtime failure of the fused job fall back
+    to per-metric jobs. A metric with no value leaves its checks
+    NOT_EVALUATED via None-propagation.
+    """
+    fallback_cause = None
+    built: list[AggMetric] = []
+    built_cols = []
+    candidates: list[tuple[AggMetric, Any]] = []
+    for m in agg_metrics.values():
+        try:
+            candidates.append((m, m.build()))
+        except Exception as e:
+            errors[m.key] = _cause(e)
+            measurements.append(Measurement(m.key, None, m.name, errors[m.key]))
+    # analysis cost: ONE batched analyze when every expression is valid
+    # (the overwhelmingly common case — O(1) driver roundtrips however
+    # many metrics a contract has); only a failing batch falls back to
+    # per-metric analysis to isolate the bad expression(s)
+    if candidates:
+        try:
+            filtered.select(
+                *[c.alias(f"__soda_validate_{i}") for i, (_m, c) in enumerate(candidates)]
+            )
+            built = [m for m, _c in candidates]
+            built_cols = [c for _m, c in candidates]
+        except Exception:
+            for m, col in candidates:
+                try:
+                    filtered.select(col.alias("__soda_validate"))
+                    built.append(m)
+                    built_cols.append(col)
+                except Exception as e:
+                    errors[m.key] = _cause(e)
+                    measurements.append(
+                        Measurement(m.key, None, m.name, errors[m.key])
+                    )
+    if built:
+        exprs = [c.alias(f"m_{i}") for i, c in enumerate(built_cols)]
+        try:
+            row = filtered.agg(*exprs).collect()[0]
+            rows = [row[i] for i in range(len(built))]
+        except Exception as e:
+            fallback_cause = _cause(e)
+            rows = []
+            for m, c in zip(built, built_cols):
+                try:
+                    rows.append(filtered.agg(c.alias("m_0")).collect()[0][0])
+                except Exception as e:
+                    errors[m.key] = _cause(e)
+                    rows.append(None)
+        for m, v in zip(built, rows):
+            if v is None and m.coerce_zero and m.key not in errors:
+                v = 0  # SUM(CASE WHEN ...) is NULL over zero rows (ref missing_check.py:137-140)
+            values[m.key] = v
+            measurements.append(Measurement(m.key, v, m.name, errors.get(m.key)))
+    return fallback_cause
 
 
 def verify_contracts(

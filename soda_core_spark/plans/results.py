@@ -101,6 +101,15 @@ class ContractVerificationResult:
     dataset: str
     check_results: list[CheckResult]
     measurements: list[Measurement]
+    #: cause of a runtime failure of the fused aggregation job; when set,
+    #: every aggregation metric re-ran as its own job (the fallback path)
+    fused_fallback_cause: Optional[str] = None
+
+    @property
+    def fused_fallback(self) -> bool:
+        """True when the per-metric fallback path ran instead of the one
+        fused aggregation job."""
+        return self.fused_fallback_cause is not None
 
     @property
     def status(self) -> str:
@@ -121,6 +130,11 @@ class ContractVerificationResult:
 
     def summary(self) -> str:
         lines = [f"dataset={self.dataset} status={self.status}"]
+        if self.fused_fallback:
+            lines.append(
+                "  fused aggregation failed, metrics ran one job each: "
+                f"{self.fused_fallback_cause}"
+            )
         for r in self.check_results:
             lines.append(
                 f"  [{r.outcome.value.upper():>13}] {r.name}"

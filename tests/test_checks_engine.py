@@ -5,6 +5,7 @@ soda-tests/tests/integration/test_*_check.py golden diagnostics)."""
 from datetime import datetime, timezone
 
 import pytest
+import yaml
 from pyspark.sql import types as T
 
 from soda_core_spark import CheckOutcome, verify_contract
@@ -538,3 +539,47 @@ def test_runtime_metric_failure_is_not_a_zero_count(spark):
     assert bad.metric_value is None
     assert "CAST_INVALID_INPUT" in bad.message
     assert rows.outcome == CheckOutcome.PASSED and rows.metric_value == 3
+
+
+def test_fused_fallback_is_reported(spark, tmp_path):
+    """A runtime failure of the fused aggregation (an ANSI cast in a
+    ``failed_rows`` condition) makes every metric re-run as its own job.
+    The result says so, with the fused failure's cause; the other checks
+    still evaluate, and the CLI exit codes are those of the check
+    outcomes as before."""
+    from soda_core_spark.cli import main as cli_main
+
+    df = spark.createDataFrame([("1",), ("x",), ("3",)], ["v"])
+    bad = {"failed_rows": {"condition": "cast(v as int) > 100", "must_be": 0}}
+    contract = contract_from_dict(
+        {"dataset": "t", "checks": [bad, "row_count"],
+         "columns": [{"name": "v", "checks": ["missing"]}]}
+    )
+    result = verify_contract(spark, contract, df)
+    assert result.fused_fallback
+    assert result.fused_fallback_cause.startswith("NumberFormatException: ")
+    assert "CAST_INVALID_INPUT" in result.fused_fallback_cause
+    assert "fused aggregation failed" in result.summary()
+    failed, rows, missing = result.check_results
+    assert failed.outcome == CheckOutcome.NOT_EVALUATED
+    assert rows.outcome == CheckOutcome.PASSED and rows.metric_value == 3
+    assert missing.outcome == CheckOutcome.PASSED and missing.metric_value == 0
+
+    healthy = verify_contract(
+        spark, contract_from_dict({"dataset": "t", "checks": ["row_count"]}), df
+    )
+    assert not healthy.fused_fallback and healthy.fused_fallback_cause is None
+
+    data = str(tmp_path / "t.parquet")
+    df.write.parquet(data)
+
+    def exit_code(checks):
+        path = tmp_path / f"c{len(list(tmp_path.glob('c*.yml')))}.yml"
+        path.write_text(yaml.safe_dump({"dataset": "t", "checks": checks}))
+        return cli_main(["contract", "verify", "-c", str(path), "-ds",
+                         f"t={data}", "--use-active-session"])
+
+    assert exit_code([{"row_count": {"must_be": 3}}]) == 0
+    assert exit_code([{"row_count": {"must_be": 4}}]) == 1
+    assert exit_code([{"row_count": {"must_be": 4, "level": "warn"}}]) == 2
+    assert exit_code([bad, {"row_count": {"must_be": 3}}]) == 3

@@ -23,6 +23,30 @@ def test_shingles_empty_and_null_text_have_no_shingles(spark):
     assert got[4] == ["one two"]   # short doc keeps its whole-text shingle
 
 
+@pytest.mark.parametrize(
+    "op",
+    ["minhash_xxhash64", "minhash_portable", "jaccard_all_pairs", "containment_pairs"],
+)
+def test_whitespace_only_docs_are_dropped_before_pairing(spark, op):
+    """Texts of only tabs/newlines/CR have no tokens. Spark's one-argument
+    ``trim`` strips spaces only, so they used to reach the pair stage with
+    empty shingle arrays, pair with each other, and fail the 0/0 Jaccard
+    with DIVIDE_BY_ZERO under ANSI."""
+    from soda_core_spark.operators import dedup
+
+    df = spark.createDataFrame(
+        [(1, "\t\n"), (2, " \r\n "), (3, "a b c d"), (4, "e f g h")],
+        "doc_id long, text string",
+    )
+    run = {
+        "minhash_xxhash64": lambda: dedup.minhash_near_duplicates(df),
+        "minhash_portable": lambda: dedup.minhash_near_duplicates(df, portable_hash=True),
+        "jaccard_all_pairs": lambda: dedup.ngram_jaccard_all_pairs(df, threshold=0.0, max_doc_freq=None),
+        "containment_pairs": lambda: dedup.ngram_containment_pairs(df, threshold=0.0, max_doc_freq=None),
+    }[op]
+    assert run().collect() == []
+
+
 def test_kmeans_trainer_ignores_null_and_empty_vectors(spark):
     from soda_core_spark.operators.similarity import kmeans_centroids
 

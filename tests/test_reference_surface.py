@@ -490,8 +490,14 @@ def test_cli_verify_bad_yaml_and_bad_sample_exit_3(tmp_path_factory, people_parq
 
 def test_sample_limit_stable_across_jobs(spark, people):
     """sample.limit + a side query (reference check): both jobs must see
-    the SAME subset (the limited frame is pinned for the verification)."""
-    ref = spark.createDataFrame([(i,) for i in range(100)], ["rid"])
+    the SAME subset (the limited frame is pinned for the verification),
+    also while the side query runs concurrently with the fused
+    aggregation. The reference holds only the even ids, so the anti-join
+    counts the odd ids of the side query's subset, which must equal the
+    fused ``failed_rows`` count of odd ids in the aggregation's subset."""
+    ref = spark.createDataFrame([(i,) for i in range(0, 100, 2)], ["rid"])
+    # several partitions, so an unpinned limit could answer from any of them
+    people = people.repartition(8)
     c = contract_from_yaml(
         """
 dataset: people_sl
@@ -500,6 +506,8 @@ sample:
 checks:
   - row_count:
       must_be: 30
+  - failed_rows:
+      condition: "id % 2 = 1"
 columns:
   - name: id
     checks:
@@ -512,9 +520,9 @@ columns:
     res = verify_contract(spark, c, people, datasets={"refs": ref})
     by_type = {r.check_type: r for r in res.check_results}
     assert by_type["row_count"].outcome == CheckOutcome.PASSED
-    # every id 0..99 exists in refs → 0 invalid regardless of subset, and
+    odd = by_type["failed_rows"].metric_value
+    assert by_type["invalid"].metric_value == odd
     # rows tested by the reference check equals the sampled row count
-    assert by_type["invalid"].metric_value == 0
     assert by_type["invalid"].diagnostics["checkRowsTested"] == 30
 
 
