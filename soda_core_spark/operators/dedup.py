@@ -86,41 +86,58 @@ def _spread(df: DataFrame) -> DataFrame:
     key — cheap relative to the HOF work it parallelizes; skipped when the
     input is already wide (the 100 TB case).
 
-    Width is ESTIMATED from the plan's input files, never measured:
-    ``df.rdd.getNumPartitions()`` would plan the frame for execution, and
-    under AQE that runs every upstream shuffle stage of the input as a
-    hidden Spark job at plan-build time (the real query then runs it
-    again). Also Spark Connect safe (Connect frames have no ``.rdd``; the
-    target width falls back to ``spark.sql.shuffle.partitions`` when
-    ``sparkContext`` is unavailable):
+    The target width is :func:`_cores`; the input width is
+    :func:`_scan_splits`, an estimate from the plan's input files:
 
-    * ``inputFiles()`` unavailable or empty → NOT a file scan. Such frames
-      are typically post-shuffle (join/agg output) and already wide — a
-      defensive ``repartition`` would add a full extra shuffle — so the
-      spread is skipped. (A tiny Connect LocalRelation also lands here and
-      loses the spread; it had to fit in one RPC, so the loss is bounded.)
-    * file scan → partition width is estimated as total bytes /
-      ``maxPartitionBytes`` when the files are locally stat-able. The file
-      COUNT alone is an upper bound, not an estimate: the scan packs many
-      tiny files into one partition, so counting files can report "wide"
-      for a scan that actually runs on one task. Un-stat-able (remote)
-      files spread defensively — a bounded extra shuffle versus an
-      unboundedly serialized HOF stage."""
-    spark = df.sparkSession
+    * not a file scan → such frames are typically post-shuffle (join/agg
+      output) and already wide — a defensive ``repartition`` would add a
+      full extra shuffle — so the spread is skipped. (A tiny Connect
+      LocalRelation also lands here and loses the spread; it had to fit
+      in one RPC, so the loss is bounded.)
+    * un-stat-able (remote) files spread defensively — a bounded extra
+      shuffle versus an unboundedly serialized HOF stage."""
+    par = _cores(df.sparkSession)
+    est = _scan_splits(df)
+    if est is None:
+        return df  # non-file source: post-shuffle frames are already wide
+    return df.repartition(par) if est < par else df
+
+
+def _cores(spark) -> int:
+    """``defaultParallelism``, the cores that run a stage. Spark Connect
+    sessions have no ``sparkContext``: there it is
+    ``spark.sql.shuffle.partitions``, or 200 when that is unreadable."""
     try:
-        par = spark.sparkContext.defaultParallelism
+        return spark.sparkContext.defaultParallelism
     except Exception:
         try:
             # may be non-numeric ("auto" under some AQE deployments)
-            par = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+            return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
         except Exception:
-            par = 200
+            return 200
+
+
+def _scan_splits(df: DataFrame) -> int | None:
+    """Estimated partition count of ``df``'s file scan: total bytes /
+    ``maxPartitionBytes``, at least 1. None when ``df`` reads no files
+    (``inputFiles()`` unavailable or empty); 0 when a file is remote or
+    cannot be stat-ed, so its size is unknown.
+
+    ESTIMATED, never measured: ``df.rdd.getNumPartitions()`` would plan
+    the frame for execution, and under AQE that runs every upstream
+    shuffle stage of the input as a hidden Spark job at plan-build time
+    (the real query then runs it again); it is also missing on Spark
+    Connect frames. The file COUNT alone is an upper bound, not an
+    estimate: the scan packs many tiny files into one partition, so
+    counting files can report "wide" for a scan that actually runs on
+    one task."""
     try:
         files = df.inputFiles()
     except Exception:
         files = None
     if not files:
-        return df  # non-file source: post-shuffle frames are already wide
+        return None
+    spark = df.sparkSession
     try:
         max_pb = _parse_bytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
@@ -131,13 +148,34 @@ def _spread(df: DataFrame) -> DataFrame:
     for path in files:
         local = path[5:] if path.startswith("file:") else path
         if not os.path.isabs(local):
-            return df.repartition(par)  # remote/unknown scheme: defensive
+            return 0  # remote/unknown scheme
         try:
             total += os.path.getsize(local)
         except OSError:
-            return df.repartition(par)
-    est = max(1, -(-total // max_pb))
-    return df.repartition(par) if est < par else df
+            return 0
+    return max(1, -(-total // max_pb))
+
+
+def _small_input_width(df: DataFrame) -> int | None:
+    """:func:`_cores` when ``df`` reads local files smaller than one split
+    per core (the inputs :func:`_spread` widens), else None.
+
+    The CPU-bound dedup stages (:func:`_band_candidate_pairs`,
+    :func:`_shared_shingle_counts`) hash such an input's rows onto this
+    many partitions with an explicit ``repartition``. AQE never coalesces
+    that ``REPARTITION_BY_NUM`` exchange, so the stage reading it uses
+    every core; behind the planner's own exchange AQE's size-based
+    coalescing squeezed it into ONE task, because the shuffled rows are
+    16-byte ids (500 docs, local[4]: a warm ``minhash_near_duplicates``
+    1.07-1.21 s → 0.79 s). The width is the core count, not
+    ``spark.sql.shuffle.partitions``: under Spark's default of 200 the
+    same call ran 200-task stages of microsecond tasks (warm capped
+    ``ngram_jaccard_all_pairs`` 5.7-6.9 s, against 0.9-1.1 s at 4).
+    Larger, remote and non-file inputs (None) keep the planner-inserted
+    exchanges: AQE sizes them and its skew-join rule can split them."""
+    cores = _cores(df.sparkSession)
+    splits = _scan_splits(df)
+    return cores if splits and splits < cores else None
 
 
 def _parse_bytes(v: str) -> int:
@@ -415,14 +453,28 @@ def _band_candidate_pairs(
     The shuffle stays planner-inserted (not a user ``repartition``), so
     AQE's skew-join rule (spark.sql.adaptive.skewJoin), which only
     splits such shuffles, still splits the hot band key of a giant
-    duplicate cluster."""
+    duplicate cluster.
+
+    On a small input (:func:`_small_input_width`) the candidate pairs
+    take an explicit hash exchange on ``(id_a, id_b)`` at the core count
+    ahead of the dedupe, so the dedupe and the caller's Jaccard verify,
+    which run in the stage that reads it, use every core instead of the
+    one task AQE coalesced them into (500 docs, local[4]: a 1-task 0.54 s
+    verify of 5,087 pairs). The exchange satisfies the dedupe's
+    distribution, so it takes the place of the planner's and no exchange
+    is added. Its cost: the partial dedupe now runs after the shuffle,
+    not before it (500 docs: 6,634 rows / 50.2 KB through the pair
+    exchange instead of 5,087 / 41.3 KB). Larger inputs keep the
+    planner's exchange and its map-side partial dedupe."""
     banded = _banded_frame(base, num_hashes, bands, portable_hash, mins)
     a, b = banded.alias("a"), banded.hint("MERGE").alias("b")
-    return (
-        a.join(b, F.expr("a.band = b.band AND a.id < b.id"))
-        .selectExpr("a.id AS id_a", "b.id AS id_b")
-        .dropDuplicates(["id_a", "id_b"])
+    pairs = a.join(b, F.expr("a.band = b.band AND a.id < b.id")).selectExpr(
+        "a.id AS id_a", "b.id AS id_b"
     )
+    width = _small_input_width(base)
+    if width is not None:
+        pairs = pairs.repartition(width, "id_a", "id_b")
+    return pairs.dropDuplicates(["id_a", "id_b"])
 
 
 def _attach_shingles(
@@ -464,10 +516,12 @@ def minhash_near_duplicates(
        to build (:func:`_minhash_mins`, :func:`_band_keys_expr`);
     2. the band self-join runs over bare ``(id, band)`` pairs through
        ONE shared ``hashpartitioning(band)`` shuffle, so each signature
-       is computed once, and yields distinct candidates
-       (:func:`_band_candidate_pairs`);
-    3. shingle arrays are re-attached by two id-joins;
-    4. exact Jaccard verifies candidates only.
+       is computed once (:func:`_band_candidate_pairs`);
+    3. the stage that reads its pairs' exchange dedupes them,
+       re-attaches the shingle arrays by two id-joins and verifies exact
+       Jaccard on the candidates only; on a small input that exchange is
+       an explicit one at the core count, so the verify uses every core
+       however few bytes the pairs are.
 
     ``portable_hash=True`` swaps xxhash64 for lexicographic mins over md5
     strings (signature m_i = min over shingles of md5("i|shingle"); band
@@ -703,6 +757,33 @@ def _shared_shingle_counts(
     f² join rows); ``hash_shingles`` joins on 64/60-bit shingle hashes
     instead of the 20-40-byte strings (:func:`_shingle_hash`).
 
+    A capped call on a small input (:func:`_small_input_width`) runs in
+    one stage: the ``(id, s)`` postings take ONE explicit hash exchange
+    on ``s`` at the core count, and the stage reading it applies the cap
+    as ``count(1) OVER (PARTITION BY s)``, runs the self-join (both sides
+    read that exchange, once through reuse) and the partial pair count,
+    on every core instead of the one task AQE coalesced the join into
+    (500 docs, local[4]: a 2.6M-row join as one 0.23-0.27 s task). The
+    ``groupBy("s")`` aggregate joined back, with its own exchange and its
+    own rebuild of the shingle arrays, is gone there (8 → 6 jobs per
+    500-doc call). Its costs, and why it stays on small inputs:
+
+    * the partial pair count now runs in every posting partition, so
+      more partial rows cross the pair exchange (500 docs, local[4]:
+      216,808 rows / 2.0 MB instead of 54,423 / 0.5 MB out of one task);
+    * AQE's skew-join rule does not split an explicit exchange, and the
+      window buffers a hot shingle's whole posting list in one task
+      before the cap drops it. Larger inputs therefore keep the planner's
+      exchanges and the aggregate cap, which streams a hot shingle
+      through a join against its one frequency row; uncapped calls
+      (``max_doc_freq=None``, where a shingle in f documents is f² join
+      rows) keep the planner's exchange at every size;
+    * Spark drops a user repartition when its child already has that
+      partitioning: placed after the frequency join (already hashed on
+      ``s``), the exchange vanished and the stage fell back to one task.
+      Check the FINAL adaptive plan, not the initial one
+      (``tests/test_plan_shape.py`` does).
+
     r6 plan shape, A/B-measured on the sf1.0 bench corpus (127M
     co-occurrence rows through the pair aggregate):
 
@@ -726,7 +807,15 @@ def _shared_shingle_counts(
     ex = base.selectExpr("id", "explode_outer(shl) AS s")
     if key is not None:
         ex = ex.select("id", key(F.col("s")).alias("s"))
-    if max_doc_freq is not None:
+    width = None if max_doc_freq is None else _small_input_width(base)
+    if width is not None:
+        ex = (
+            ex.repartition(width, "s")
+            .selectExpr("id", "s", "count(1) OVER (PARTITION BY s) AS df_")
+            .where(F.col("df_") <= max_doc_freq)
+            .select("id", "s")
+        )
+    elif max_doc_freq is not None:
         freq = ex.groupBy("s").agg(F.expr("count(1) AS df_"))
         ex = ex.join(freq, "s").where(F.col("df_") <= max_doc_freq).drop("df_")
     a, b = ex.alias("a"), ex.hint("SHUFFLE_HASH").alias("b")
@@ -753,8 +842,11 @@ def ngram_jaccard_all_pairs(
     """Exact all-pairs n-gram Jaccard via an inverted-index self-join on
     shingles (:func:`_shared_shingle_counts`, which holds the plan
     shape). No blocking key is needed: a pair has Jaccard > 0 iff it
-    shares at least one shingle. Two shuffles (explode-join on shingle,
-    groupBy pair); sizes are broadcast-joined back. Returns
+    shares at least one shingle. Two shuffles: the postings hashed on
+    the shingle (the self-join and partial pair count read it), then
+    the pair counts on the pair; a capped call on a large input adds
+    the cap's frequency aggregate. Sizes are broadcast-joined back.
+    Returns
     ``(id_a, id_b, n_shared, jaccard)``, jaccard at 6 dp.
 
     ``max_doc_freq``: shingles occurring in more than this many documents

@@ -50,6 +50,11 @@ MEASUREMENTS_SCHEMA = T.StructType(
         T.StructField("metric_id", T.StringType()),
         T.StructField("metric_name", T.StringType()),
         T.StructField("value", T.StringType()),  # stringified (mixed types)
+        # the failure cause ("<ExceptionType>: <message>") of a metric that
+        # failed to build, analyse or run (value is then NULL); appended
+        # last, like metric_unavailable: read old and new parquet files
+        # with mergeSchema, or evolve the table schema first on Iceberg
+        T.StructField("error", T.StringType()),
     ]
 )
 
@@ -102,7 +107,7 @@ def measurements_df(
     ts = scan_ts or datetime.now(timezone.utc)
     rows = [
         (ts, result.dataset, m.metric_id, m.metric_name,
-         None if m.value is None else str(m.value))
+         None if m.value is None else str(m.value), m.error)
         for m in result.measurements
     ]
     return spark.createDataFrame(rows, MEASUREMENTS_SCHEMA)

@@ -579,6 +579,108 @@ def test_jaccard_all_pairs_matches_python_oracle_random(spark):
     assert got == want
 
 
+def test_small_input_width_only_for_small_local_file_inputs(spark, tmp_path):
+    """The dedup stages place their explicit exchanges, at the core count,
+    only over a local file input smaller than one split per core; larger,
+    remote and non-file inputs (None) keep the planner's exchanges."""
+    from soda_core_spark.operators.dedup import _small_input_width
+
+    cores = spark.sparkContext.defaultParallelism
+    small = str(tmp_path / "small")
+    spark.range(50).selectExpr("id", "'a b c' AS text").write.parquet(small)
+    file_df = spark.read.parquet(small)
+    local_df = spark.createDataFrame([(1, "a b c")], "id long, text string")
+
+    class _Remote:
+        sparkSession = spark
+
+        def inputFiles(self):
+            return ["s3://bucket/part-0.parquet"]
+
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.files.maxPartitionBytes")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "200")
+        assert _small_input_width(file_df) == cores  # not the 200
+        assert _small_input_width(local_df) is None  # not a file scan
+        assert _small_input_width(_Remote()) is None  # size unknown
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "16")
+        assert _small_input_width(file_df) is None  # a split per core or more
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("source", ["file", "memory"])
+@pytest.mark.parametrize("hash_shingles", [None, "xxhash64", "portable"])
+def test_posting_cap_matches_python_capped_oracle(
+    spark, tmp_path, hash_shingles, source
+):
+    """The posting cap drops exactly the shingles in MORE than
+    ``max_doc_freq`` documents: a corpus whose shared shingles sit below,
+    exactly at and above the cap gives the plain-Python capped answer for
+    both pair operators, in every shingle-key mode. Set sizes stay the
+    uncapped ones. A small parquet input takes the window cap, an
+    in-memory one the frequency-aggregate cap."""
+    import itertools
+
+    from soda_core_spark.operators.dedup import (
+        ngram_containment_pairs,
+        ngram_jaccard_all_pairs,
+    )
+
+    cap = 3
+    members = {
+        "hot shingle here": [0, 1, 2, 3, 4],  # 5 docs: above the cap
+        "edge case phrase": [0, 5, 6],  # 3 docs: at the cap, kept
+        "low freq words": [1, 2],  # 2 docs: below the cap
+        "rare pair text": [3, 6],
+    }
+    docs = []
+    for i in range(8):
+        parts = [p for p, ids in members.items() if i in ids] or [f"lonely doc {i}"]
+        # doc-unique separators keep cross-phrase shingles out of the overlap
+        docs.append((i, " ".join(f"{p} sep{i}x{k}" for k, p in enumerate(parts))))
+    docs += [(8, "hot shingle"), (9, None)]
+
+    sh = {i: _py_shingles(t) for i, t in docs if t is not None}
+    freq = {}
+    for s in sh.values():
+        for g in s:
+            freq[g] = freq.get(g, 0) + 1
+    assert {"below", "at", "above"} == {
+        "below" if f < cap else "at" if f == cap else "above"
+        for f in freq.values() if f > 1
+    }
+    capped = {i: {g for g in s if freq[g] <= cap} for i, s in sh.items()}
+    want = {}
+    for a, b in itertools.combinations(sorted(sh), 2):
+        shared = len(capped[a] & capped[b])
+        if shared:
+            want[(a, b)] = (shared, len(sh[a]), len(sh[b]))
+    assert any(len(sh[a] & sh[b]) > n for (a, b), (n, _, _) in want.items())
+
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    if source == "file":
+        df.write.parquet(str(tmp_path / "docs"))
+        df = spark.read.parquet(str(tmp_path / "docs"))
+    kw = dict(max_doc_freq=cap, hash_shingles=hash_shingles)
+    jac = {
+        (r["id_a"], r["id_b"]): r
+        for r in ngram_jaccard_all_pairs(df, threshold=0.0, **kw).collect()
+    }
+    con = {
+        (r["id_a"], r["id_b"]): r
+        for r in ngram_containment_pairs(df, threshold=0.0, **kw).collect()
+    }
+    assert set(jac) == set(want) == set(con)
+    for k, (shared, na, nb) in want.items():
+        assert jac[k]["n_shared"] == con[k]["n_shared"] == shared
+        assert jac[k]["jaccard"] == pytest.approx(shared / (na + nb - shared), abs=1e-6)
+        assert con[k]["containment_a"] == pytest.approx(shared / na, abs=1e-6)
+        assert con[k]["containment_b"] == pytest.approx(shared / nb, abs=1e-6)
+
+
 @pytest.mark.parametrize("num_hashes,bands", [(16, 4), (10, 3)])
 def test_portable_band_keys_match_md5_contract(spark, num_hashes, bands):
     """Portable-mode LSH band keys equal a hashlib statement of the

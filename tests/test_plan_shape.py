@@ -238,6 +238,111 @@ def test_band_join_skew_split_on_shared_band_shuffle(spark):
     assert "ReusedExchange" in final, final
 
 
+def _uncoalesced_reads(lines, marker):
+    """The final-plan lines of the exchanges (or their reuses) whose text
+    contains ``marker``, after asserting each is read as written: its
+    query stage is not under an ``AQEShuffleRead coalesced``."""
+    found = [i for i, l in enumerate(lines) if marker in l]
+    for i in found:
+        assert "ShuffleQueryStage" in lines[i - 1], lines[i - 1]
+        assert "AQEShuffleRead" not in lines[i - 2], lines[i - 2]
+    return [lines[i] for i in found]
+
+
+def test_dedup_cpu_stages_run_on_every_core(spark):
+    """On a small file input the two CPU-bound dedup stages run on every
+    core even though their shuffled rows are 16-byte ids that AQE would
+    coalesce into one task: the LSH candidate pairs are hashed on (id_a, id_b)
+    ahead of the dedupe and Jaccard verify, and the inverted-index
+    postings take ONE hash exchange on the shingle that feeds the
+    posting-cap window, the SHUFFLE_HASH self-join and the partial pair
+    count (no separate doc-frequency aggregate). Checked on the FINAL
+    adaptive plan: Spark may drop a user repartition whose child already
+    has that partitioning."""
+    import re
+
+    from soda_core_spark.operators.dedup import (
+        minhash_near_duplicates,
+        ngram_jaccard_all_pairs,
+    )
+
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    try:
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        lsh = minhash_near_duplicates(docs)
+        pairs = ngram_jaccard_all_pairs(
+            docs, max_doc_freq=200, hash_shingles="xxhash64"
+        )
+        finals = []
+        for out in (lsh, pairs):
+            out.collect()  # finalize the adaptive plan
+            finals.append(_plan(out).split("== Initial Plan ==")[0])
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+    lines = finals[0].splitlines()
+    cand = _uncoalesced_reads(lines, "Exchange hashpartitioning(id_a")
+    assert len(cand) == 1, finals[0]
+    assert re.search(r"id_b#\d+L, 4\), REPARTITION_BY_NUM", cand[0]), cand[0]
+
+    lines = finals[1].splitlines()
+    post = _uncoalesced_reads(lines, "Exchange hashpartitioning(s#")
+    assert len(post) == 2, finals[1]
+    assert sum("ReusedExchange" in l for l in post) == 1, finals[1]
+    assert all(re.search(r"s#\d+L, 4\), REPARTITION_BY_NUM", l) for l in post)
+    assert "HashAggregate(keys=[s#" not in finals[1], finals[1]
+    assert "ShuffledHashJoin [s#" in finals[1], finals[1]
+
+
+def test_dedup_exchanges_capped_at_cores_under_default_width(spark):
+    """Under Spark's default of 200 shuffle partitions, the two explicit
+    dedup exchanges over the one-file 500-doc input run at the core
+    count, not as 200-task stages AQE cannot coalesce."""
+    import re
+
+    from soda_core_spark.operators.dedup import (
+        minhash_near_duplicates,
+        ngram_jaccard_all_pairs,
+    )
+
+    cores = spark.sparkContext.defaultParallelism
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        lsh = _plan(minhash_near_duplicates(docs))
+        pairs = _plan(ngram_jaccard_all_pairs(docs, max_doc_freq=200))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)
+    assert re.search(rf"id_b#\d+L, {cores}\), REPARTITION_BY_NUM", lsh), lsh
+    assert re.search(rf"\(s#\d+, {cores}\), REPARTITION_BY_NUM", pairs), pairs
+
+
+def test_dedup_keeps_planner_exchanges_off_small_capped_inputs(spark):
+    """A non-file input, and an uncapped all-pairs call at any size, keep
+    the planner-inserted exchanges that AQE sizes and its skew-join rule
+    can split: no explicit REPARTITION_BY_NUM exchange, and the cap (when
+    set) is the frequency aggregate joined back."""
+    import re
+
+    from soda_core_spark.operators.dedup import (
+        minhash_near_duplicates,
+        ngram_jaccard_all_pairs,
+    )
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    mem = spark.createDataFrame(docs.collect(), docs.schema)
+    lsh = _plan(minhash_near_duplicates(mem))
+    capped = _plan(ngram_jaccard_all_pairs(mem, max_doc_freq=200))
+    uncapped = _plan(ngram_jaccard_all_pairs(docs, max_doc_freq=None))
+    for plan in (lsh, capped, uncapped):
+        # _spread's round-robin spread of a small file input stays
+        assert not re.search(r"hashpartitioning\([^)]*\), REPARTITION_BY_NUM", plan)
+    assert "HashAggregate(keys=[s#" in capped, capped
+    assert "Window [" not in capped + uncapped
+
+
 @pytest.mark.parametrize(
     "query", ["q33_ngram_jaccard_pairs", "q96_containment_pairs"]
 )
